@@ -140,7 +140,7 @@ object Caches {
     * The drain is GENERATION-LAGGED, not immediate: a frame is released
     * only once the completed-action counter is ≥ 2 past the generation it
     * was registered under. Operators run internal eager actions while
-    * BUILDING a frame (PageRank's vertex count, the embedding dim probe),
+    * BUILDING a frame (g23's edge count, the embedding dim probe),
     * so draining on the very next `onSuccess` would unpersist load-bearing
     * caches mid-operator; the lag keeps every cache alive through its own
     * operator's build and the caller's first action on the result.

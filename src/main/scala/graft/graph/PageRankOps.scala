@@ -1,7 +1,10 @@
 package graft.graph
 
 import graft.Caches.Tracked
+import org.apache.spark.HashPartitioner
 import org.apache.spark.graphx.{Edge, Graph, VertexId}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -19,70 +22,111 @@ import graft.Tables
   * but is NOT numerically identical (out-degree normalization, different
   * dangling-mass handling — SURVEY §2.10).
   *
-  * Scale: each iteration is one shuffle (contributions keyed by dst) +
-  * one join against the statically-partitioned vertex/weight caches. Each
-  * iteration ends in an EAGER `localCheckpoint`: materialize + truncate
-  * lineage in one job (without lineage cuts the plan doubles per iteration
-  * and the optimizer chokes long before the cluster does — the reference
-  * hits the same issue and caches per iteration, SURVEY §3.4). Superseded
-  * checkpoint blocks are freed by the ContextCleaner as the old RDDs are
-  * GC'd, so memory is bounded by GC cadence. The cut routes through
-  * [[graft.Cut.cut]]: set `spark.graft.reliableCheckpointDir` and every
-  * iteration checkpoints to SHARED storage instead — the executor-loss
-  * switch, drilled end-to-end by [[graft.FaultDrill]] (kill an executor
-  * mid-loop, digest-identical result).
+  * Every loop of the family (g06/g06b/g07/g11 global, g16/g16b
+  * personalized) runs on ONE kernel, [[rankRdd]], over pair RDDs under a
+  * single `HashPartitioner` sized by `spark.sql.shuffle.partitions`. The
+  * static sides are partitioned once and persisted: the weight table as
+  * an adjacency RDD `(src, Array[(dst, weight)])`, the vertex frame as
+  * `(id, (reset, pr₀))`. An iteration is `rank ⋈ adj` (narrow: both sides
+  * carry the partitioner), one `reduceByKey` shuffle of the
+  * contributions, and `vertices ⟕ contribs` (narrow again), ended by an
+  * eager [[graft.Cut.cutRdd]] — one shuffle, one job per iteration.
   *
-  * Round-3 profile at sf0.1/local[32] (total ≈ 3.6-4.3 s vs the
-  * reference's 22.5 s): vertices 0.3 s, weight build 1.3 s (the events
-  * self-join), ~0.4 s per iteration — fixed job-scheduling cost of the
-  * eager checkpoint at 32 partitions, not data volume. Checkpoint cadence
-  * was measured (every-1 vs every-2 vs end-only): no wall-clock change at
-  * this scale, so the safest lineage story (every iteration) stays.
+  * Why RDDs, not DataFrames: on Spark 4.1 a `Dataset.localCheckpoint`
+  * plan reports unknown partitioning, so a DataFrame loop that cuts every
+  * iteration is re-planned every iteration — AQE broadcasts the weight
+  * table and the contributions afresh, 4 jobs per iteration. The RDD cut
+  * keeps the RDD and with it the partitioner, so the static sides never
+  * move again.
+  *
+  * Cuts: each iteration's eager cut materializes the rank and truncates
+  * its lineage, so the next iteration reads it straight from the blocks
+  * and the driver's lineage stays one iteration deep. Superseded
+  * checkpoint blocks are freed by the ContextCleaner as the old RDDs are
+  * GC'd, so memory is bounded by GC cadence; the adjacency and vertex
+  * RDDs are unpersisted as soon as the last iteration is cut, so a
+  * consumer that only calls `Caches.release` keeps nothing behind. Set
+  * `spark.graft.reliableCheckpointDir` and every iteration checkpoints
+  * to SHARED storage instead — the executor-loss switch, drilled
+  * end-to-end by [[graft.FaultDrill]] (kill an executor mid-loop,
+  * digest-identical result).
   */
 object PageRankOps {
   val Alpha = 0.15
   val Iterations = 5
 
-  /** The deterministic DataFrame loop. Returns (id, pagerank) unrounded. */
+  /** The deterministic loop. Returns (id, pagerank) unrounded. */
   def pageRankLoop(s: SparkSession, dir: String,
       iterations: Int = Iterations): DataFrame =
-    // hash-partition the (static) weight table on the join key ONCE: the
-    // cached partitioning satisfies the join's distribution requirement in
-    // every iteration, so only the rank side shuffles per step.
-    pageRankLoopWith(s, dir, iterations,
-      CoGraph.normalizedWeights(s, dir).repartition(col("src")).tracked)
+    pageRankLoopWith(s, dir, iterations, CoGraph.normalizedWeights(s, dir))
 
-  /** Loop over a CALLER-supplied pre-partitioned, cached weight table —
-    * for callers that also need the edge set themselves (g11), so the
-    * weight build (the most expensive stage of the whole query, ~1.3 s of
-    * g06's 3.6 s at sf0.1) runs once, not twice.
+  /** Global PageRank over a caller-supplied (src, dst, weight) table:
+    * reset α/N and pr₀ = 1/N on every vertex, N arriving by broadcasting
+    * the 1-row vertex count — no driver collect.
     */
   def pageRankLoopWith(s: SparkSession, dir: String,
       iterations: Int, w: DataFrame): DataFrame = {
-    // hash-partition the (static) vertex set on the join key once, like the
-    // weight table — each iteration's dangling left-join then reuses
-    // the cached distribution instead of re-shuffling vertices.
     val vertices = Components.vertices(s, dir)
-      .repartition(col("id")).tracked
-    val n = vertices.count()
-    var pr = vertices.withColumn("pagerank", lit(1.0 / n))
-    for (i <- 1 to iterations) {
-      // `pr` derives from `w` after iteration 1, so qualify both sides
-      // explicitly — Spark's ambiguous-self-join check rejects the bare
-      // column references otherwise.
-      val contribs = pr.alias("p").join(w.alias("w"),
-          col("p.id") === col("w.src"))
-        .select(col("w.dst").as("id"),
-          (col("p.pagerank") * col("w.weight")).as("contrib"))
-        .groupBy(col("id"))
-        .agg(sum(col("contrib")).as("sum_contribution"))
-      val next = vertices.join(contribs, Seq("id"), "left_outer")
-        .select(col("id"),
-          (lit(1.0 - Alpha) * coalesce(col("sum_contribution"), lit(0.0))
-            + lit(Alpha / n)).as("pagerank"))
-      pr = graft.Cut.cut(next) // see object doc for the memory story
+    val n = vertices.agg(count(lit(1)).as("n"))
+    rank(w, vertices.crossJoin(broadcast(n))
+      .select(col("id"), (lit(Alpha) / col("n")).as("reset"),
+        (lit(1.0) / col("n")).as("pagerank")), iterations)
+  }
+
+  /** [[rankRdd]] as an (id, pagerank) frame. */
+  private def rank(w: DataFrame, base: DataFrame,
+      iterations: Int): DataFrame = {
+    val session = w.sparkSession
+    import session.implicits._
+    rankRdd(w, base, iterations).toDF("id", "pagerank")
+  }
+
+  /** The co-partitioned kernel (see object doc): `w` is (src, dst,
+    * weight), `base` is (id, reset, pagerank₀). Iterates
+    * `pr ← (1-α)·Σ(pr_src·w) + reset` and returns the cut final rank,
+    * partitioned like the adjacency.
+    */
+  private[graft] def rankRdd(w: DataFrame, base: DataFrame,
+      iterations: Int): RDD[(Long, Double)] = {
+    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
+    val s = w.sparkSession
+    val part = new HashPartitioner(s.sessionState.conf.numShufflePartitions)
+    val adj = w.select(col("src"), col("dst"), col("weight")).rdd
+      .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
+      .groupByKey(part).mapValues(_.toArray)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val vertices = base.select(col("id"), col("reset"), col("pagerank")).rdd
+      .map(r => (r.getLong(0), (r.getDouble(1), r.getDouble(2))))
+      .partitionBy(part)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    var pr = vertices.mapValues(_._2)
+    try {
+      for (_ <- 1 to iterations)
+        pr = graft.Cut.cutRdd(step(pr, adj, vertices), s)
+      pr
+    } finally {
+      // the cut final rank no longer reads either static side
+      adj.unpersist(blocking = false)
+      vertices.unpersist(blocking = false)
     }
-    pr
+  }
+
+  /** One iteration before its cut. With `pr`, `adj` and `vertices` under
+    * one partitioner, both joins are narrow and the contributions'
+    * `reduceByKey` is the only shuffle; the result keeps the partitioner.
+    */
+  private[graft] def step(pr: RDD[(Long, Double)],
+      adj: RDD[(Long, Array[(Long, Double)])],
+      vertices: RDD[(Long, (Double, Double))]): RDD[(Long, Double)] = {
+    val part = adj.partitioner.get
+    val contribs = pr.join(adj, part)
+      .flatMap { case (_, (p, out)) =>
+        out.iterator.map { case (dst, weight) => (dst, p * weight) }
+      }
+      .reduceByKey(part, _ + _)
+    vertices.leftOuterJoin(contribs, part).mapValues {
+      case ((reset, _), c) => (1.0 - Alpha) * c.getOrElse(0.0) + reset
+    }
   }
 
   /** g06 query — PR scores rounded to 10 dp (float-drift-proof vs the
@@ -108,8 +152,7 @@ object PageRankOps {
   def cappedQ(s: SparkSession, dir: String,
       cap: Int = NeighborAgg.BucketCap): DataFrame =
     pageRankLoopWith(s, dir, Iterations,
-      CoGraph.cappedNormalizedWeights(s, dir, cap)
-        .repartition(col("src")).tracked)
+      CoGraph.cappedNormalizedWeights(s, dir, cap))
       .select(col("id"), round(col("pagerank"), 10).as("pagerank"))
       .orderBy(col("id"))
 
@@ -231,18 +274,16 @@ object PageRankOps {
     * centrality. Complements g13's hop distance with a weighted,
     * decay-aware version of the same question.
     *
-    * Same deterministic loop shape as g06 (one shuffle per iteration
-    * against the cached pre-partitioned weight table, eager
-    * `localCheckpoint` lineage cuts), with two differences: the reset
-    * vector is a COLUMN of the cached vertex frame (not a global
-    * constant), and |S| arrives by broadcasting the 1-row seed count —
-    * no driver collect. Unreached vertices stay at exactly 0.0 and are
-    * filtered; output is the top-[[PprTopK]].
+    * Same kernel as g06 ([[rankRdd]]: one shuffle and one job per
+    * iteration), with a different vertex side: the reset is α/|S| on
+    * seeds and 0 elsewhere (pr₀ = 1/|S| on seeds), |S| arriving by
+    * broadcasting the 1-row seed count — no driver collect. Unreached
+    * vertices stay at exactly 0.0 and are filtered; output is the
+    * top-[[PprTopK]].
     */
   def personalizedPageRank(s: SparkSession, dir: String,
       iterations: Int = Iterations): DataFrame =
-    pprOn(s, dir, iterations,
-      CoGraph.normalizedWeights(s, dir).repartition(col("src")).tracked)
+    pprOn(s, dir, iterations, CoGraph.normalizedWeights(s, dir))
 
   /** g16b — g16 on the bucket-capped edge build: same twin relation as
     * [[cappedQ]]/g06b (identical loop, seeds, reset mass, and top-k; only
@@ -253,16 +294,13 @@ object PageRankOps {
     */
   def g16bCappedPpr(s: SparkSession, dir: String,
       cap: Int = NeighborAgg.BucketCap): DataFrame =
-    pprOn(s, dir, Iterations,
-      CoGraph.cappedNormalizedWeights(s, dir, cap)
-        .repartition(col("src")).tracked)
+    pprOn(s, dir, Iterations, CoGraph.cappedNormalizedWeights(s, dir, cap))
 
   private def pprOn(s: SparkSession, dir: String,
       iterations: Int, w: DataFrame): DataFrame = {
     val seeds = confirmedOffenders(s, dir)
     val nSeeds = seeds.agg(count(lit(1)).as("ns"))
-    // (id, reset, pr0): reset = α/|S| on seeds else 0 — cached once,
-    // partitioned on the join key like g06's vertex frame
+    // (id, reset, pr0): reset = α/|S| on seeds else 0
     val base = Components.vertices(s, dir)
       .join(seeds.withColumn("is_seed", lit(1)), Seq("id"), "left_outer")
       .crossJoin(broadcast(nSeeds))
@@ -271,22 +309,8 @@ object PageRankOps {
           .otherwise(lit(0.0)).as("reset"),
         when(col("is_seed").isNotNull, lit(1.0) / col("ns"))
           .otherwise(lit(0.0)).as("pagerank"))
-      .repartition(col("id")).tracked
-    var pr = base.select(col("id"), col("pagerank"))
-    for (_ <- 1 to iterations) {
-      val contribs = pr.alias("p").join(w.alias("w"),
-          col("p.id") === col("w.src"))
-        .select(col("w.dst").as("id"),
-          (col("p.pagerank") * col("w.weight")).as("contrib"))
-        .groupBy(col("id"))
-        .agg(sum(col("contrib")).as("sum_contribution"))
-      pr = base.join(contribs, Seq("id"), "left_outer")
-        .select(col("id"),
-          (lit(1.0 - Alpha) * coalesce(col("sum_contribution"), lit(0.0))
-            + col("reset")).as("pagerank"))
-        .transform(graft.Cut.cut)
-    }
-    pr.filter(col("pagerank") > 0)
+    rank(w, base, iterations)
+      .filter(col("pagerank") > 0)
       .select(col("id"), round(col("pagerank"), 10).as("pagerank"))
       .orderBy(col("pagerank").desc, col("id"))
       .limit(PprTopK)

@@ -81,6 +81,13 @@ object Scc {
       .distinct()
   }
 
+  /** [[q]]'s partition count: one per ~250k edges plus one, capped at
+    * `maxParts`. The min is taken in Long so an edge count past
+    * Int.MaxValue·250k (~5.4e14) caps instead of wrapping negative.
+    */
+  private[graft] def sccParts(edges: Long, maxParts: Int): Int =
+    math.max(1L, math.min(edges / 250000L + 1, maxParts.toLong)).toInt
+
   /** g23 query — (id, scc, scc_size) for every chain-touched vertex;
     * scc = lowest member id.
     */
@@ -97,8 +104,7 @@ object Scc {
     // certification SFs stop paying 32-way overhead per superstep.
     // Row target: ~250k edges/partition (~4 MB packed; GraphX's in-mem
     // expansion keeps the working set per task in the tens of MB).
-    val parts = math.max(1, math.min((e.count() / 250000L).toInt + 1,
-      s.sparkContext.defaultParallelism * 32))
+    val parts = sccParts(e.count(), s.sparkContext.defaultParallelism * 32)
     val edgeRdd = e.select(col("src"), col("dst")).as[(Long, Long)]
       .rdd.coalesce(parts)
       .map { case (a, b) => Edge(a: VertexId, b: VertexId, 1) }

@@ -321,4 +321,12 @@ class ScalePathSpec extends AnyFunSuite with SparkTestSession {
     assert(got.exists(r => r.getLong(0) == 1L && r.getLong(1) == 2L
       && r.getLong(2) == 0L))
   }
+
+  test("g23 partition sizing caps, never wraps, past 5.4e14 edges") {
+    // (6e14 / 250000).toInt wraps negative and used to clamp to 1 partition
+    assert(graph.Scc.sccParts(600000000000000L, 128) == 128)
+    assert(graph.Scc.sccParts(Long.MaxValue, 128) == 128)
+    assert(graph.Scc.sccParts(0L, 128) == 1)
+    assert(graph.Scc.sccParts(1000000L, 128) == 5)
+  }
 }
