@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark main (driver contract): runs the headline queries on
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line
@@ -20,21 +19,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_MASTER: e.g. "local-cluster[4,8,4096]" to run every query
     // across SEPARATE executor JVMs — the certification that closures,
     // broadcasts and Kryo-serialized task state survive a real cluster
     // boundary, which local[n] never exercises (see SCALE.md).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.fromEnv().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm-up: touch EVERY table once so OS page cache + Spark codegen are
     // hot before timing (mirrors a long-lived cluster, not a cold JVM).
@@ -91,17 +80,13 @@ object Bench {
         // this, run 2 of a caching query (d03, g06, ...) measures a
         // cache hit while non-caching queries measure real recompute —
         // incomparable numbers. JIT/page-cache warmth is what min() keeps.
-        // Also unpersist leaked RDD blocks (GraphX Graph() persists
-        // MEMORY_ONLY outside the SQL cache): accumulated storage blocks
-        // steal unified-memory execution room from later queries, which
-        // r4's driver sample showed as a diffuse slowdown on the
+        // releaseAll also unpersists leaked RDD blocks (GraphX Graph()
+        // persists MEMORY_ONLY outside the SQL cache): accumulated storage
+        // blocks steal unified-memory execution room from later queries,
+        // which an r4 bench sample showed as a diffuse slowdown on the
         // events/documents/embeddings queries that follow the graph ones.
-        // checkpointed RDDs exempt: truncated lineage, not recomputable
-        // (FraudML's memoized split/model pins)
-        Caches.release(spark) // drain the registry's strong refs too
+        Caches.releaseAll(spark)
         spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(r => if (!r.isCheckpointed) r.unpersist(false))
         val t0 = System.nanoTime()
         // noop sink, NOT count(): count() lets Catalyst rewrite the plan
         // under Aggregate[count(1)] — outer joins against unique keys are

@@ -27,8 +27,8 @@ import scala.collection.mutable.ArrayBuffer
   * exactly the graft-registered frames of one session, leaving consumer
   * caches alone. Call it between jobs in a long-lived session (see
   * docs/QUICKSTART.md), or install [[autoRelease]] once and get the same
-  * hygiene with no per-job call; `Bench`/`Verify` drain it after every
-  * query.
+  * hygiene with no per-job call; the harnesses (`Bench`, `Verify`,
+  * `Profile`, `FaultDrill`) sweep with [[releaseAll]] between queries.
   *
   * Lifetime notes:
   *   - References are STRONG, keyed by session identity, with the same

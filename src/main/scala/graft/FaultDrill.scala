@@ -2,8 +2,6 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
-
 /** Executor-loss recovery drill (SCALE.md evidence): on a 1000-executor
   * cluster, executor death is routine — Spark's contract is that lost
   * shuffle/task state is recomputed from lineage and the job still
@@ -65,13 +63,7 @@ object FaultDrill {
          else Nil)
     val master =
       sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[3,4,4096]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "12")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    val builder = GraftSession.builder(master, 12)
     reliableDir.foreach(d =>
       builder.config("spark.graft.reliableCheckpointDir", d))
     val spark = builder.getOrCreate()
@@ -91,14 +83,12 @@ object FaultDrill {
       }.toSeq
 
     val results = names.map { name =>
+      Caches.releaseAll(spark)
       spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(r => if (!r.isCheckpointed) r.unpersist(false))
       val clean = digest(name)
 
+      Caches.releaseAll(spark)
       spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(r => if (!r.isCheckpointed) r.unpersist(false))
       // fire the kill while the job runs: 300 ms in, murder one executor
       val killer = new Thread(() => {
         Thread.sleep(300)

@@ -3,13 +3,13 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query optimization profiler (guide §1: measure first).
   *
-  * Runs the named queries under the EXACT Bench session config and sink
-  * (noop), but additionally attaches a SparkListener that prints, per
-  * Spark job inside the query: wall duration, stage count, task count,
+  * Runs the named queries under the Bench session
+  * ([[GraftSession.fromEnv]], same `SPARK_GRAFT_MASTER`/`SPARK_GRAFT_CPUS`)
+  * and sink (noop), but additionally attaches a SparkListener that prints,
+  * per Spark job inside the query: wall duration, stage count, task count,
   * input bytes, shuffle read/write bytes, and spill — the stage-level
   * evidence the Spark UI would show, in a headless-friendly form. This is
   * how a round decides whether a slow query is shuffle-bound, job-count
@@ -19,6 +19,8 @@ import org.apache.spark.sql.SparkSession
   * Usage:
   *   SPARK_GRAFT_SF_DIR=… SPARK_GRAFT_CPUS=32 \
   *     sbt "runMain graft.Profile g06_pagerank_loop g30_ktruss"
+  * A conf A/B goes through Spark's own channels (`-Dspark.<key>=<v>` or
+  * `spark-submit --conf`) for any key the session config does not pin.
   *
   * Diagnostic tool only — never part of the driver contract; the bench
   * artifact stays graft.Bench's.
@@ -26,22 +28,7 @@ import org.apache.spark.sql.SparkSession
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-    // A/B experiments without recompiling: "k=v;k=v" applied on top of the
-    // Bench baseline config.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      builder.config(k.trim, v.trim)
-    })
-    val spark = builder.getOrCreate()
+    val spark = GraftSession.fromEnv().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     final case class JobRow(jobId: Int, desc: String, started: Long,
@@ -103,16 +90,12 @@ object Profile {
         } catch { case e: Throwable =>
           System.err.println(s"[profile] explain $name failed: ${e.getMessage}")
         }
-        Caches.release(spark)
+        Caches.releaseAll(spark)
         spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(rdd => if (!rdd.isCheckpointed) rdd.unpersist(false))
       }
       (1 to runs).foreach { r =>
-        Caches.release(spark)
+        Caches.releaseAll(spark)
         spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(rdd => if (!rdd.isCheckpointed) rdd.unpersist(false))
         jobs.synchronized { jobs.clear(); stageToJob.clear() }
         spark.sparkContext.setJobDescription(s"$name run$r")
         val t0 = System.nanoTime()

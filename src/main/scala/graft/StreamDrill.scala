@@ -20,15 +20,10 @@ object StreamDrill {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]")
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    implicit val spark: SparkSession = GraftSession.builder(master, 4)
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming." +
           "state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,18 +15,10 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length == 3) Some(args(2).split(',').toSet) else None
     def selected(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_MASTER: e.g. "local-cluster[4,8,4096]" — dump every query
     // result through SEPARATE executor JVMs for the multi-executor
     // bit-identical-results certification (SCALE.md); default local[n].
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.fromEnv().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
@@ -42,14 +33,9 @@ object Verify {
       // Graph() persists its vertex/edge RDDs (MEMORY_ONLY, deserialized)
       // outside the SQL cache, so the graph queries would otherwise leak
       // heap across the run (measured: the 8g sf1 run died of exactly
-      // this after 66 queries).
-      // checkpointed RDDs are exempt: their lineage is truncated, so they
-      // CANNOT be recomputed after unpersist — and FraudML's memoized
-      // split/model pins live exactly there (eager localCheckpoint)
-      Caches.release(spark) // drain the registry's strong refs too
+      // this after 66 queries); releaseAll sweeps those too.
+      Caches.releaseAll(spark)
       spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(r => if (!r.isCheckpointed) r.unpersist(false))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

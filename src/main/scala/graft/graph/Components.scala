@@ -573,11 +573,7 @@ object Components {
     // edge set is a subset), falls back to the two-long spelling
     // out-of-envelope. The agg doubles as the cache materializer the
     // loop's first count() needed anyway.
-    val idb = und.agg(min(col("src")), max(col("src")),
-      min(col("dst")), max(col("dst"))).head()
-    val packable = !idb.isNullAt(0) &&
-      idb.getLong(0) >= 0L && idb.getLong(2) >= 0L &&
-      idb.getLong(1) < (1L << 31) && idb.getLong(3) < (1L << 31)
+    val packable = NeighborAgg.packable(und)
     var kept: DataFrame = null
     var prev = -1L
     var fixed = false

@@ -152,6 +152,46 @@ object NeighborAgg {
        |FROM hop1 h1 LEFT JOIN hop2 h2 ON h1.src = h2.src
        |ORDER BY user_id""".stripMargin
 
+  /** The 31-bit packing gate shared by g20's closing-edge probe and
+    * k-truss's support round: true iff `edges` is non-empty and every
+    * `src`/`dst` id lies in [0, 2^31), so `src<<32|dst` is injective.
+    * Runs one min/max aggregate — pass a materialized (cached/tracked)
+    * frame.
+    */
+  private[graph] def packable(edges: DataFrame): Boolean = {
+    val idb = edges.agg(min(col("src")), max(col("src")),
+      min(col("dst")), max(col("dst"))).head()
+    !idb.isNullAt(0) &&
+      idb.getLong(0) >= 0L && idb.getLong(2) >= 0L &&
+      idb.getLong(1) < (1L << 31) && idb.getLong(3) < (1L << 31)
+  }
+
+  /** Triangle corners (x, y, z) over a canonical (src < dst) undirected
+    * relation — the a⋈b path extension plus the closing-edge probe.
+    *
+    * r15 (§2.3/§3.1, the g30 packing applied to the same join shape):
+    * when the id domain fits 31 bits (gated on the MATERIALIZED edge
+    * set — callers pass a cached/tracked frame), the closing-edge probe
+    * joins on ONE packed long (src<<32|dst) instead of the two-key
+    * (src, dst) — its hashed relation becomes a LongHashedRelation with
+    * primitive-key probes (measured 2.5× on g20 at sf0.1). Injective on
+    * the gated domain ⇒ identical triangles; falls back to the two-key
+    * join out of envelope. Shared by g20 and g20b so the enumeration
+    * can never diverge between the uncapped and capped arms.
+    */
+  private def triCorners(und: DataFrame): DataFrame = {
+    val ab = und.as("a").join(und.as("b"), col("b.src") === col("a.dst"))
+    (if (packable(und))
+      ab.join(
+        und.select(shiftleft(col("src"), 32).bitwiseOR(col("dst")).as("ce"))
+          .as("c"),
+        col("c.ce") === shiftleft(col("a.src"), 32).bitwiseOR(col("b.dst")))
+    else
+      ab.join(und.as("c"),
+        col("c.src") === col("a.src") && col("c.dst") === col("b.dst")))
+      .select(col("a.src").as("x"), col("a.dst").as("y"), col("b.dst").as("z"))
+  }
+
   /** g20 — local clustering coefficient (ego-net density): for each node
     * with degree ≥ 2, lcc = 2·triangles / (deg·(deg−1)) — the fraction of
     * a node's neighbor pairs that are themselves connected. THE
@@ -169,37 +209,6 @@ object NeighborAgg {
     * before the join, as in the edge build) bounds the worst case. All
     * joins are equi-joins on edge keys.
     */
-  /** Triangle corners (x, y, z) over a canonical (src < dst) undirected
-    * relation — the a⋈b path extension plus the closing-edge probe.
-    *
-    * r15 (§2.3/§3.1, the g30 packing applied to the same join shape):
-    * when the id domain fits 31 bits (gated on the MATERIALIZED edge
-    * set — callers pass a cached/tracked frame), the closing-edge probe
-    * joins on ONE packed long (src<<32|dst) instead of the two-key
-    * (src, dst) — its hashed relation becomes a LongHashedRelation with
-    * primitive-key probes (measured 2.5× on g20 at sf0.1). Injective on
-    * the gated domain ⇒ identical triangles; falls back to the two-key
-    * join out of envelope. Shared by g20 and g20b so the enumeration
-    * can never diverge between the uncapped and capped arms.
-    */
-  private def triCorners(und: DataFrame): DataFrame = {
-    val idb = und.agg(min(col("src")), max(col("src")),
-      min(col("dst")), max(col("dst"))).head()
-    val packable = !idb.isNullAt(0) &&
-      idb.getLong(0) >= 0L && idb.getLong(2) >= 0L &&
-      idb.getLong(1) < (1L << 31) && idb.getLong(3) < (1L << 31)
-    val ab = und.as("a").join(und.as("b"), col("b.src") === col("a.dst"))
-    (if (packable)
-      ab.join(
-        und.select(shiftleft(col("src"), 32).bitwiseOR(col("dst")).as("ce"))
-          .as("c"),
-        col("c.ce") === shiftleft(col("a.src"), 32).bitwiseOR(col("b.dst")))
-    else
-      ab.join(und.as("c"),
-        col("c.src") === col("a.src") && col("c.dst") === col("b.dst")))
-      .select(col("a.src").as("x"), col("a.dst").as("y"), col("b.dst").as("z"))
-  }
-
   def g20ClusteringCoeff(s: SparkSession, dir: String): DataFrame = {
     val e = CoGraph.edges(s, dir).tracked
     val und = e.filter(col("src") < col("dst")).tracked

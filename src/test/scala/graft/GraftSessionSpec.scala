@@ -34,6 +34,16 @@ class GraftSessionSpec extends AnyFunSuite with SparkTestSession {
       .head().getLong(0) > 0)
   }
 
+  test("the shared test session runs GraftSession's engine config") {
+    // build-time conf (what the SparkContext was created with: the
+    // serializer lives only there) and the session's runtime view
+    val built = spark.sparkContext.getConf
+    GraftSession.EngineConf.foreach { case (k, v) =>
+      assert(built.getOption(k).contains(v), s"built conf: $k")
+      assert(spark.conf.getOption(k).contains(v), s"session conf: $k")
+    }
+  }
+
   test("GraftExtensions injects vec_dot with no imperative registration") {
     import org.apache.spark.sql.SparkSession
     val shared = spark // force the shared session to exist first

@@ -6,13 +6,10 @@ import org.apache.spark.sql.SparkSession
 trait SparkTestSession {
   val Sf: String = "/root/testdata/sf0.001"
   val SfMid: String = "/root/testdata/sf0.01"
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.ui.enabled", "false")
+  /** Built by [[GraftSession.builder]]: the suite certifies the exact
+    * engine config (Kryo included) that Bench measures.
+    */
+  lazy val spark: SparkSession = GraftSession.builder("local[4]", 4)
     .getOrCreate()
 
   /** Run `body` with the streaming state-store provider pinned (e.g. to
