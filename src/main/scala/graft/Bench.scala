@@ -44,19 +44,13 @@ object Bench {
     // bench-under-fault certification (SCALE.md round 13). The kill time
     // is recorded so the drill runner can assert it landed mid-loop.
     val killedAtMs = new java.util.concurrent.atomic.AtomicLong(-1L)
-    // ADVICE r13: match only DESCENDANTS of this JVM (local-cluster
-    // executors are our children) — an allProcesses() scan could kill an
-    // executor of an unrelated Spark job sharing the host — and keep the
-    // thread handle so the audit line can JOIN it (bounded) instead of
+    // Only this JVM's own executors are candidates (LocalCluster); keep
+    // the thread handle so the audit line can JOIN it (bounded) instead of
     // racing the kill and printing killedAtMs=-1.
     val killer = sys.env.get("SPARK_GRAFT_DRILL_KILL_MS").map(_.toLong).map { ms =>
       val t = new Thread(() => {
         Thread.sleep(ms)
-        import scala.jdk.CollectionConverters._
-        ProcessHandle.current().descendants().iterator().asScala.find { p =>
-          p.info().commandLine().map[Boolean](
-            _.contains("CoarseGrainedExecutorBackend")).orElse(false)
-        } match {
+        LocalCluster.ownExecutors().headOption match {
           case Some(p) =>
             System.err.println(s"[bench] drill: killing executor pid ${p.pid()}")
             p.destroyForcibly()

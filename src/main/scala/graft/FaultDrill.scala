@@ -1,7 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 /** Executor-loss recovery drill (SCALE.md evidence): on a 1000-executor
   * cluster, executor death is routine — Spark's contract is that lost
   * shuffle/task state is recomputed from lineage and the job still
@@ -76,12 +74,6 @@ object FaultDrill {
         rows.map(r => r.toString.hashCode.toLong).sum)
     }
 
-    def executorPids(): Seq[ProcessHandle] =
-      ProcessHandle.allProcesses().iterator().asScala.filter { p =>
-        p.info().commandLine().map[Boolean](
-          _.contains("CoarseGrainedExecutorBackend")).orElse(false)
-      }.toSeq
-
     val results = names.map { name =>
       Caches.releaseAll(spark)
       spark.catalog.clearCache()
@@ -92,7 +84,7 @@ object FaultDrill {
       // fire the kill while the job runs: 300 ms in, murder one executor
       val killer = new Thread(() => {
         Thread.sleep(300)
-        executorPids().headOption match {
+        LocalCluster.ownExecutors().headOption match {
           case Some(p) =>
             System.err.println(s"[drill] $name: killing executor pid ${p.pid()}")
             p.destroyForcibly()

@@ -54,12 +54,6 @@ object StreamFaultDrill {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def executorPids(): Seq[ProcessHandle] =
-      ProcessHandle.allProcesses().iterator().asScala.filter { p =>
-        p.info().commandLine().map[Boolean](
-          _.contains("CoarseGrainedExecutorBackend")).orElse(false)
-      }.toSeq
-
     /** Killer with a landing receipt (ADVICE r12): records WHEN the kill
       * fired (-1 pending, -2 no executor found) so the drill can assert
       * the executor died while the faulted query was still running — a
@@ -73,7 +67,7 @@ object StreamFaultDrill {
       private val killedAt = new java.util.concurrent.atomic.AtomicLong(-1L)
       private val t = new Thread(() => {
         Thread.sleep(delayMs)
-        executorPids().headOption match {
+        LocalCluster.ownExecutors().headOption match {
           case Some(p) =>
             System.err.println(s"[streamdrill] $tag: killing executor pid ${p.pid()}")
             p.destroyForcibly()

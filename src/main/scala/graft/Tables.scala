@@ -1,6 +1,11 @@
 package graft
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet loaders over the driver testdata layout (`TESTDATA.md`).
   *
@@ -15,11 +20,50 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * materialize here. At 100 TB the scan is the single most
   * important operator: every query below selects only the columns it needs
   * so `ReadSchema` stays minimal and row-group statistics can skip data.
+  *
+  * Schema memo: inferring a Parquet schema runs a Spark job (the footer
+  * merge), so a builder that read a table with a bare `read.parquet`
+  * would launch an unlabelled job before returning its frame. Each
+  * session infers a table's schema once: the first read of a path is a
+  * bare `read.parquet`, whose schema is kept; every later read in
+  * that session is `read.schema(kept).parquet(path)` — still a fresh bare
+  * scan (new attribute ids, the same pushdown and pruning), but no job.
+  * The memo is keyed by session (weakly: a stopped, unreferenced session
+  * is collected with its entries) and then by path, and each entry
+  * carries the file's length and modification time from one Hadoop
+  * `getFileStatus`. A file rewritten at the same path gets a new length
+  * or time and is inferred again; a change below a directory's top level
+  * that leaves the directory's own time alone is not seen until the next
+  * session.
   */
 object Tables {
   private def path(dir: String, name: String) = s"$dir/$name.parquet"
-  private def t(name: String)(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(path(dir, name))
+
+  /** session → path → ((length, mtime), inferred schema) */
+  private val schemas = new java.util.WeakHashMap[SparkSession,
+    ConcurrentHashMap[String, ((Long, Long), StructType)]]
+
+  private def t(name: String)(s: SparkSession, dir: String): DataFrame = {
+    val p = path(dir, name)
+    val hp = new Path(p)
+    val stamp =
+      try {
+        val st = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
+          .getFileStatus(hp)
+        Some((st.getLen, st.getModificationTime))
+      } catch { case _: FileNotFoundException => None }
+    val memo = schemas.synchronized(
+      schemas.computeIfAbsent(s, _ => new ConcurrentHashMap))
+    (stamp, Option(memo.get(p))) match {
+      case (Some(now), Some((was, schema))) if now == was =>
+        s.read.schema(schema).parquet(p)
+      case _ =>
+        // a missing path keeps read.parquet's own error
+        val df = s.read.parquet(p)
+        stamp.foreach(now => memo.put(p, (now, df.schema)))
+        df
+    }
+  }
 
   def region(s: SparkSession, dir: String): DataFrame   = t("region")(s, dir)
   def nation(s: SparkSession, dir: String): DataFrame   = t("nation")(s, dir)

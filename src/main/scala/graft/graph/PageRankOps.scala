@@ -8,6 +8,7 @@ import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import scala.reflect.ClassTag
 
 /** G6/G7 — PageRank (reference `notebooks/4_graphx.ipynb:836-908`,
   * SURVEY §2.10 G6).
@@ -26,11 +27,19 @@ import graft.Tables
   * personalized) runs on ONE kernel, [[rankRdd]], over pair RDDs under a
   * single `HashPartitioner` sized by `spark.sql.shuffle.partitions`. The
   * static sides are partitioned once and persisted: the weight table as
-  * an adjacency RDD `(src, Array[(dst, weight)])`, the vertex frame as
+  * an adjacency RDD `(src, Array[(dst, weight)])`, the vertex side as
   * `(id, (reset, pr₀))`. An iteration is `rank ⋈ adj` (narrow: both sides
   * carry the partitioner), one `reduceByKey` shuffle of the
   * contributions, and `vertices ⟕ contribs` (narrow again), ended by an
   * eager [[graft.Cut.cutRdd]] — one shuffle, one job per iteration.
+  *
+  * The global loops' vertex side is lazy: the distinct `user_id`s come
+  * from the bare events scan (no exchange, so AQE runs no stage job while
+  * the query is built) through one `reduceByKey` straight into the
+  * kernel's partitioner, persisted. N is one labelled `count()` of that
+  * RDD — the only action before the iterations — and it also fills the
+  * cache every iteration reads. reset = α/N and pr₀ = 1/N are mapped onto
+  * the cached ids, the same doubles as `lit(α) / col("n")` gave.
   *
   * Why RDDs, not DataFrames: on Spark 4.1 a `Dataset.localCheckpoint`
   * plan reports unknown partitioning, so a DataFrame loop that cuts every
@@ -61,53 +70,67 @@ object PageRankOps {
     pageRankLoopWith(s, dir, iterations, CoGraph.normalizedWeights(s, dir))
 
   /** Global PageRank over a caller-supplied (src, dst, weight) table:
-    * reset α/N and pr₀ = 1/N on every vertex, N arriving by broadcasting
-    * the 1-row vertex count — no driver collect.
+    * reset α/N and pr₀ = 1/N on every vertex, over the lazy vertex side
+    * of the object doc — no driver collect, one labelled count.
     */
   def pageRankLoopWith(s: SparkSession, dir: String,
       iterations: Int, w: DataFrame): DataFrame = {
-    val vertices = Components.vertices(s, dir)
-    val n = vertices.agg(count(lit(1)).as("n"))
-    rank(w, vertices.crossJoin(broadcast(n))
-      .select(col("id"), (lit(Alpha) / col("n")).as("reset"),
-        (lit(1.0) / col("n")).as("pagerank")), iterations)
+    val ids = Tables.events(s, dir).select(col("user_id")).rdd
+      .map(r => (r.getLong(0), ()))
+      .reduceByKey(partitioner(s), (a, _) => a)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val n =
+      try labelledCount(ids, "PageRank vertex count N")
+      catch { case e: Throwable => ids.unpersist(blocking = false); throw e }
+    toFrame(s, rankRdd(w, ids, iterations)(_ => (Alpha / n, 1.0 / n)))
   }
 
-  /** [[rankRdd]] as an (id, pagerank) frame. */
-  private def rank(w: DataFrame, base: DataFrame,
-      iterations: Int): DataFrame = {
-    val session = w.sparkSession
-    import session.implicits._
-    rankRdd(w, base, iterations).toDF("id", "pagerank")
+  /** `rdd.count()` as a job described by `label` (Spark's job-description
+    * property, restored afterwards), so the builder's one eager action is
+    * named in listeners and traces.
+    */
+  private def labelledCount(rdd: RDD[_], label: String): Long = {
+    val sc = rdd.sparkContext
+    val key = "spark.job.description"
+    val prev = sc.getLocalProperty(key)
+    sc.setJobDescription(label)
+    try rdd.count() finally sc.setLocalProperty(key, prev)
   }
+
+  private def toFrame(s: SparkSession, rank: RDD[(Long, Double)]): DataFrame = {
+    import s.implicits._
+    rank.toDF("id", "pagerank")
+  }
+
+  /** The kernel's one partitioner, sized like a SQL shuffle. */
+  private def partitioner(s: SparkSession) =
+    new HashPartitioner(s.sessionState.conf.numShufflePartitions)
 
   /** The co-partitioned kernel (see object doc): `w` is (src, dst,
-    * weight), `base` is (id, reset, pagerank₀). Iterates
+    * weight); `base` is the persisted vertex side under [[partitioner]],
+    * and `init` maps its value to (reset, pagerank₀). Iterates
     * `pr ← (1-α)·Σ(pr_src·w) + reset` and returns the cut final rank,
-    * partitioned like the adjacency.
+    * partitioned like the adjacency. `base` is unpersisted on the way out.
     */
-  private[graft] def rankRdd(w: DataFrame, base: DataFrame,
-      iterations: Int): RDD[(Long, Double)] = {
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
+  private[graft] def rankRdd[V: ClassTag](w: DataFrame, base: RDD[(Long, V)],
+      iterations: Int)(init: V => (Double, Double)): RDD[(Long, Double)] = {
     val s = w.sparkSession
-    val part = new HashPartitioner(s.sessionState.conf.numShufflePartitions)
-    val adj = w.select(col("src"), col("dst"), col("weight")).rdd
-      .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
-      .groupByKey(part).mapValues(_.toArray)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val vertices = base.select(col("id"), col("reset"), col("pagerank")).rdd
-      .map(r => (r.getLong(0), (r.getDouble(1), r.getDouble(2))))
-      .partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var pr = vertices.mapValues(_._2)
     try {
-      for (_ <- 1 to iterations)
-        pr = graft.Cut.cutRdd(step(pr, adj, vertices), s)
-      pr
+      require(iterations >= 1, s"iterations must be >= 1, got $iterations")
+      val adj = w.select(col("src"), col("dst"), col("weight")).rdd
+        .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
+        .groupByKey(partitioner(s)).mapValues(_.toArray)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val vertices = base.mapValues(init)
+        var pr = vertices.mapValues(_._2)
+        for (_ <- 1 to iterations)
+          pr = graft.Cut.cutRdd(step(pr, adj, vertices), s)
+        pr
+      } finally adj.unpersist(blocking = false)
     } finally {
       // the cut final rank no longer reads either static side
-      adj.unpersist(blocking = false)
-      vertices.unpersist(blocking = false)
+      base.unpersist(blocking = false)
     }
   }
 
@@ -309,7 +332,10 @@ object PageRankOps {
           .otherwise(lit(0.0)).as("reset"),
         when(col("is_seed").isNotNull, lit(1.0) / col("ns"))
           .otherwise(lit(0.0)).as("pagerank"))
-    rank(w, base, iterations)
+      .rdd.map(r => (r.getLong(0), (r.getDouble(1), r.getDouble(2))))
+      .partitionBy(partitioner(s))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    toFrame(s, rankRdd(w, base, iterations)(identity))
       .filter(col("pagerank") > 0)
       .select(col("id"), round(col("pagerank"), 10).as("pagerank"))
       .orderBy(col("pagerank").desc, col("id"))

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (getOrCreate singleton). */
@@ -11,6 +15,30 @@ trait SparkTestSession {
     */
   lazy val spark: SparkSession = GraftSession.builder("local[4]", 4)
     .getOrCreate()
+
+  /** Jobs started while `body` runs on this thread, counted by a job
+    * group so no other thread's jobs are included.
+    */
+  def jobsOf(body: => Any): Int = {
+    val group = s"jobs-of-${System.nanoTime}"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "counted")
+    try {
+      body
+      ListenerBusDrain(sc)
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 
   /** Run `body` with the streaming state-store provider pinned (e.g. to
     * RocksDB, which transformWithState requires), restoring the previous

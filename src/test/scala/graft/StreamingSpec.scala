@@ -66,6 +66,20 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     assert(got.exists(_.startsWith("transactions,type_tag=money event_id=5i,value=9.99 ")))
   }
 
+  test("console sink (S6) drains a MemoryStream under Trigger.AvailableNow") {
+    implicit val ctx = spark.sqlContext
+    import spark.implicits._
+    val ms = MemoryStream[String]
+    ms.addData(jsonEvent(6, "error", "4.5", "2024-01-01T13:00:00Z"),
+      jsonEvent(7, "click", "1.0", "2024-01-01T13:05:00Z"))
+    val derived = StreamPipeline.derive(
+      StreamPipeline.parse(ms.toDF().select(col("value"))))
+    val q = StreamPipeline.consoleSink(derived, Trigger.AvailableNow()).start()
+    assert(q.awaitTermination(60000), "the AvailableNow query did not terminate")
+    assert(q.exception.isEmpty)
+    assert(q.recentProgress.map(_.numInputRows).sum == 2)
+  }
+
   test("watermarked hourly window counts aggregate by event time") {
     implicit val ctx = spark.sqlContext
     import spark.implicits._
