@@ -41,27 +41,10 @@ object Bench {
     val sinkMode = sys.env.getOrElse("SPARK_GRAFT_SINK", "noop")
     // SPARK_GRAFT_DRILL_KILL_MS (drill-only, with a local-cluster master):
     // force-kill one executor JVM that many ms into the timed loop — the
-    // bench-under-fault certification (SCALE.md round 13). The kill time
-    // is recorded so the drill runner can assert it landed mid-loop.
-    val killedAtMs = new java.util.concurrent.atomic.AtomicLong(-1L)
-    // Only this JVM's own executors are candidates (LocalCluster); keep
-    // the thread handle so the audit line can JOIN it (bounded) instead of
-    // racing the kill and printing killedAtMs=-1.
-    val killer = sys.env.get("SPARK_GRAFT_DRILL_KILL_MS").map(_.toLong).map { ms =>
-      val t = new Thread(() => {
-        Thread.sleep(ms)
-        LocalCluster.ownExecutors().headOption match {
-          case Some(p) =>
-            System.err.println(s"[bench] drill: killing executor pid ${p.pid()}")
-            p.destroyForcibly()
-            killedAtMs.set(System.currentTimeMillis())
-          case None =>
-            System.err.println("[bench] drill: no executor JVM found")
-            killedAtMs.set(-2L)
-        }
-      })
-      t.setDaemon(true); t.start(); t
-    }
+    // bench-under-fault certification (SCALE.md round 13). The audit line
+    // below reports when the kill landed against the loop's end.
+    val killer = sys.env.get("SPARK_GRAFT_DRILL_KILL_MS")
+      .map(ms => new LocalCluster.Killer("bench", ms.toLong))
     // best of N runs per query (default 3): the first run carries
     // codegen-compile and JIT cost plus container noise (measured variance
     // up to 3x on the iterative queries, and round-2 showed container-wide
@@ -80,7 +63,6 @@ object Bench {
         // which an r4 bench sample showed as a diffuse slowdown on the
         // events/documents/embeddings queries that follow the graph ones.
         Caches.releaseAll(spark)
-        spark.catalog.clearCache()
         val t0 = System.nanoTime()
         // noop sink, NOT count(): count() lets Catalyst rewrite the plan
         // under Aggregate[count(1)] — outer joins against unique keys are
@@ -111,24 +93,18 @@ object Bench {
     // whether the per-query release sweep left anything behind (tracked
     // registry entries, SQL cache, non-checkpointed persistent RDDs) —
     // the two properties the bench-under-fault drill asserts.
-    if (sys.env.contains("SPARK_GRAFT_DRILL_KILL_MS")) {
-      // join the killer (bounded) so killedAtMs below is the landed value,
-      // not a race; a still-alive killer past the bound is interrupted so
-      // it cannot fire into whatever runs next in this JVM
-      killer.foreach { t =>
-        t.join(10000)
-        if (t.isAlive) { t.interrupt(); killedAtMs.compareAndSet(-1L, -3L); () }
-      }
+    killer.foreach { k =>
+      val loopEndMs = System.currentTimeMillis()
+      k.receipt(loopEndMs).foreach(f => System.err.println(s"[bench] drill: $f"))
       // rdds_pending is the state the FINAL query left (bounded — one
       // query's own caches); accumulation across queries would show up
       // here as a large count, because the per-run sweep above is the
       // only thing that drains it mid-loop.
       val pending = spark.sparkContext.getPersistentRDDs.values
         .count(!_.isCheckpointed)
-      val drained = Caches.release(spark)
-      spark.catalog.clearCache()
-      System.err.println(s"[bench] drill: killedAtMs=${killedAtMs.get()} " +
-        s"loopEndMs=${System.currentTimeMillis()} rdds_pending=$pending " +
+      val drained = Caches.releaseAll(spark)
+      System.err.println(s"[bench] drill: killedAtMs=${k.killedAtMs} " +
+        s"loopEndMs=$loopEndMs rdds_pending=$pending " +
         s"tracked_drained=$drained failures=${results.count(_._2 < 0)}")
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }

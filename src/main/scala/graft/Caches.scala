@@ -44,12 +44,13 @@ import scala.collection.mutable.ArrayBuffer
   *   - Double-unpersist is a no-op, so operators that release their own
   *     intermediates early (c13's staged unpersists) still register here.
   *   - GraphX `Graph()` persists vertex/edge RDDs OUTSIDE the SQL cache;
-  *     those are not Datasets and cannot register. [[releaseAll]] adds the
-  *     harness sweep for them: every non-checkpointed persisted RDD in the
+  *     those are not Datasets and cannot register. [[releaseAll]] is the
+  *     harness sweep for them and for everything else: the registry, the
+  *     whole SQL cache, and every non-checkpointed persisted RDD in the
   *     context (checkpoint pins are exempt — their lineage is truncated,
   *     they cannot be recomputed; FraudML's memoized split lives there).
-  *     It is session-wide by nature (an RDD has no owning session), so it
-  *     also drops consumer-persisted RDDs — opt-in, documented.
+  *     It is context-wide by nature (an RDD has no owning session), so it
+  *     also drops consumer caches and RDDs — opt-in, documented.
   */
 object Caches {
   /** Per-session registry state: registered frames tagged with the
@@ -118,14 +119,17 @@ object Caches {
     drained.size
   }
 
-  /** [[release]] plus the GraphX sweep: unpersist every non-checkpointed
-    * persisted RDD in the context (graph-family queries persist vertex/edge
-    * RDDs outside the SQL cache). Context-wide — consumer-persisted RDDs
-    * are dropped too (they recompute lazily via lineage); checkpoint pins
-    * survive because their truncated lineage CANNOT recompute.
+  /** The harnesses' between-query sweep: [[release]], then
+    * `spark.catalog.clearCache()`, then the GraphX sweep — unpersist every
+    * non-checkpointed persisted RDD in the context (graph-family queries
+    * persist vertex/edge RDDs outside the SQL cache). Context-wide —
+    * consumer caches and consumer-persisted RDDs are dropped too (they
+    * recompute lazily via lineage); checkpoint pins survive because their
+    * truncated lineage CANNOT recompute. Returns [[release]]'s count.
     */
   def releaseAll(spark: SparkSession): Int = {
     val n = release(spark)
+    spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(r => if (!r.isCheckpointed) r.unpersist(false))
     n

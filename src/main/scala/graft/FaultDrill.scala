@@ -5,9 +5,10 @@ package graft
   * shuffle/task state is recomputed from lineage and the job still
   * produces the SAME result. `local[n]` can never exercise this (one JVM,
   * nothing to lose), so this main runs selected queries on a
-  * `local-cluster` master, force-kills one executor JVM mid-job, and
-  * compares the faulted result against a clean run of the same query in
-  * the same session.
+  * `local-cluster` master, force-kills one executor JVM mid-query (at
+  * half the clean run's wall time, with a [[LocalCluster.Killer]]
+  * receipt), and compares the faulted result against a clean run of the
+  * same query in the same session.
   *
   * Usage (via spark-submit from the packaged jar — sbt's layered
   * classloader cannot serialize lambdas for foreign executor JVMs, and a
@@ -73,37 +74,70 @@ object FaultDrill {
       (rows.length.toLong,
         rows.map(r => r.toString.hashCode.toLong).sum)
     }
+    /** The registered executors (and the driver), by host:port. */
+    def executors: Set[String] = spark.sparkContext.statusTracker
+      .getExecutorInfos.map(i => s"${i.host}:${i.port}").toSet
 
+    // Per query: a clean reference run, timed; then a faulted run whose
+    // killer fires at half the clean run's wall time. The kill must land
+    // before the faulted run ends (the receipt): a query that finishes
+    // first would otherwise report a match that tested nothing. The timed
+    // clean run must be as warm as the faulted one. So it is the query's
+    // second: its first pays codegen and JIT (measured at 2-8x the warm
+    // run on local-cluster[2,1,1024], enough for half of it to land after
+    // the faulted run had ended). A warm clean run can still be slow (w18
+    // measured 1794 ms clean, 544 ms faulted). A faulted run that ends
+    // before its kill was itself a clean run, since the receipt stops the
+    // killer. So its wall time re-times the kill, for at most 3 attempts.
+    // And each query starts only once the killed executor's replacement
+    // has registered: the killed one gone from the driver's list and the
+    // count back (bounded wait, which fails the query if it runs out).
     val results = names.map { name =>
       Caches.releaseAll(spark)
-      spark.catalog.clearCache()
-      val clean = digest(name)
-
+      digest(name)
       Caches.releaseAll(spark)
-      spark.catalog.clearCache()
-      // fire the kill while the job runs: 300 ms in, murder one executor
-      val killer = new Thread(() => {
-        Thread.sleep(300)
-        LocalCluster.ownExecutors().headOption match {
-          case Some(p) =>
-            System.err.println(s"[drill] $name: killing executor pid ${p.pid()}")
-            p.destroyForcibly()
-          case None =>
-            System.err.println(s"[drill] $name: no executor JVM found to kill")
+      val t0 = System.currentTimeMillis()
+      val clean = digest(name)
+      val cleanMs = System.currentTimeMillis() - t0
+
+      def faultedRun(attempt: Int, runMs: Long): Boolean = {
+        Caches.releaseAll(spark)
+        val before = executors
+        val killer = new LocalCluster.Killer(name, runMs / 2)
+        val f0 = System.currentTimeMillis()
+        val faulted =
+          try digest(name)
+          catch { case e: Throwable =>
+            System.err.println(s"[drill] $name FAILED after kill: ${e.getMessage}")
+            (-1L, 0L)
+          }
+        val endMs = System.currentTimeMillis()
+        val receipt = killer.receipt(endMs)
+        if (killer.killedAtMs == -1L && faulted == clean && attempt < 3) {
+          System.err.println(s"[drill] $name: run ended at +${endMs - f0} ms, " +
+            s"before its kill at +${runMs / 2} ms; re-timed")
+          faultedRun(attempt + 1, endMs - f0)
+        } else {
+          def replaced = {
+            val now = executors
+            !before.subsetOf(now) && now.size >= before.size
+          }
+          val deadline = System.currentTimeMillis() + 60000
+          while (killer.killedAtMs > 0 && !replaced &&
+              System.currentTimeMillis() < deadline) Thread.sleep(100)
+          val recovered = killer.killedAtMs <= 0 || replaced
+          if (!recovered) System.err.println(
+            s"[drill] $name: killed executor not replaced within 60 s " +
+              s"(before=${before.size} now=${executors.size}, driver included)")
+          System.err.println(
+            s"[drill] $name clean=$clean ($cleanMs ms) faulted=$faulted " +
+              s"(${endMs - f0} ms, kill due at +${runMs / 2} ms) " +
+              s"match=${clean == faulted} receipt=" +
+              receipt.getOrElse(s"kill landed at +${killer.killedAtMs - f0} ms"))
+          clean == faulted && clean._1 >= 0 && receipt.isEmpty && recovered
         }
-      })
-      killer.start()
-      val faulted =
-        try digest(name)
-        catch { case e: Throwable =>
-          System.err.println(s"[drill] $name FAILED after kill: ${e.getMessage}")
-          (-1L, 0L)
-        }
-      killer.join()
-      val ok = clean == faulted && clean._1 >= 0
-      System.err.println(
-        s"[drill] $name clean=$clean faulted=$faulted match=$ok")
-      name -> ok
+      }
+      name -> faultedRun(1, cleanMs)
     }
 
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }

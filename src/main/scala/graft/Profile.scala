@@ -91,11 +91,9 @@ object Profile {
           System.err.println(s"[profile] explain $name failed: ${e.getMessage}")
         }
         Caches.releaseAll(spark)
-        spark.catalog.clearCache()
       }
       (1 to runs).foreach { r =>
         Caches.releaseAll(spark)
-        spark.catalog.clearCache()
         jobs.synchronized { jobs.clear(); stageToJob.clear() }
         spark.sparkContext.setJobDescription(s"$name run$r")
         val t0 = System.nanoTime()

@@ -1,6 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.FileTime
 
 import scala.jdk.CollectionConverters._
 
@@ -20,22 +21,14 @@ import org.apache.spark.sql.functions._
   *
   * Protocol per stream: stage the corpus as ordered json files, one
   * micro-batch per file (`maxFilesPerTrigger 1`); run CLEAN to get the
-  * reference output; re-run from a fresh checkpoint with a killer
-  * thread murdering one CoarseGrainedExecutorBackend mid-stream; assert
-  * the faulted finalized output equals the clean one AND the batch
-  * twin's answer ([[graph.CoGraph.cappedEdges]] /
-  * [[operators.Corpus.c15bCorpusOverlapKmv]]' shared estimate stage) —
-  * the same stream≡batch contract the specs pin, now under executor
-  * loss.
-  *
-  * EdgeStream staging detail: files are RANGE-partitioned and sorted on
-  * `ts` so arrival order is time order (a file source has no other
-  * order guarantee), the watermark uses 1 h lateness so a same-hour
-  * bucket split across a file boundary cannot be late-dropped, and two
-  * far-future sentinel files (written last → latest mtime → final two
-  * micro-batches) advance the watermark past every real bucket's close
-  * and fire the timers — the EdgeStreamSpec finalize pattern expressed
-  * in files.
+  * reference output; re-run from a fresh checkpoint with a
+  * [[LocalCluster.Killer]] murdering one CoarseGrainedExecutorBackend
+  * 2 s in, whose receipt must show the kill landed before the stream
+  * drained; assert the faulted finalized output equals the clean one AND
+  * the batch twin's answer ([[graph.CoGraph.cappedEdges]] /
+  * [[operators.Corpus.c15bCorpusOverlapKmv]]' shared estimate stage /
+  * d12 for DedupStream's fold) — the same stream≡batch contract the
+  * specs pin, now under executor loss.
   *
   * Usage: spark-submit --class graft.StreamFaultDrill <jar> [sfDir]
   * (SPARK_GRAFT_MASTER defaults to local-cluster[3,4,4096]).
@@ -54,55 +47,46 @@ object StreamFaultDrill {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    /** Killer with a landing receipt (ADVICE r12): records WHEN the kill
-      * fired (-1 pending, -2 no executor found) so the drill can assert
-      * the executor died while the faulted query was still running — a
-      * stream that finishes before `delayMs` would otherwise silently
-      * test nothing, and an unjoined killer could murder an executor
-      * during a LATER clean run, making reference runs depend on fault
-      * recovery. `assertFiredBefore` joins the thread (no stray kills
-      * survive past it) and returns the failure, if any.
-      */
-    final class Killer(tag: String, delayMs: Long) {
-      private val killedAt = new java.util.concurrent.atomic.AtomicLong(-1L)
-      private val t = new Thread(() => {
-        Thread.sleep(delayMs)
-        LocalCluster.ownExecutors().headOption match {
-          case Some(p) =>
-            System.err.println(s"[streamdrill] $tag: killing executor pid ${p.pid()}")
-            p.destroyForcibly()
-            killedAt.set(System.currentTimeMillis())
-          case None =>
-            System.err.println(s"[streamdrill] $tag: no executor JVM found")
-            killedAt.set(-2L)
-        }
-      })
-      t.setDaemon(true); t.start()
-
-      /** Join the killer, then fail unless the kill landed while the
-        * query was still running (`queryEndMs` = right after
-        * processAllAvailable returned).
-        */
-      def assertFiredBefore(queryEndMs: Long): Option[String] = {
-        t.join(delayMs + 60000)
-        // ADVICE r13: a killer still alive past the join bound is correctly
-        // reported as a failure below, but left running it could fire into
-        // a LATER clean arm — the exact hazard this receipt closes. Its
-        // only blocking point is the interruptible Thread.sleep, so
-        // interrupt() retires it before we return.
-        if (t.isAlive) t.interrupt()
-        killedAt.get() match {
-          case -1L => Some(s"$tag: killer thread never completed")
-          case -2L => Some(s"$tag: no executor JVM found — fault arm tested nothing")
-          case k if k > queryEndMs =>
-            Some(s"$tag: kill landed ${k - queryEndMs} ms AFTER query end — fault arm tested nothing")
-          case _ => None
-        }
-      }
-    }
-
     val work = Files.createTempDirectory("streamfaultdrill").toString
     var failures = List.empty[String]
+
+    /** Run `out` into a memory table named `tag` and drain it; on a
+      * faulted run (`kill`), under a killer 2 s in whose kill must land
+      * before the stream drained. Returns the table and the input rows
+      * the query's progress reports.
+      */
+    def runMemory(tag: String, out: DataFrame, mode: String,
+        kill: Boolean): (DataFrame, Long) = {
+      val q = out.writeStream.format("memory").queryName(tag)
+        .outputMode(mode).option("checkpointLocation", s"$work/ckpt_$tag")
+        .start()
+      val k = if (kill) Some(new LocalCluster.Killer(tag, 2000)) else None
+      q.processAllAvailable()
+      val endMs = System.currentTimeMillis()
+      q.stop()
+      k.flatMap(_.receipt(endMs)).foreach(f => failures ::= f)
+      (spark.table(tag), q.recentProgress.map(_.numInputRows).sum)
+    }
+
+    /** One micro-batch per staged file. */
+    def source(schema: String, dir: String): DataFrame =
+      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+        .json(dir)
+
+    /** FileStreamSource orders files by MODIFICATION TIME, and the parts
+      * of one write land together and can tie or shuffle. Stamp an
+      * explicit mtime staircase over `dir`'s parts in path order, then
+      * over `last`, so arrival order IS path order.
+      */
+    def staircase(dir: String, last: Seq[Path] = Nil): Unit = {
+      val parts = Files.list(Paths.get(dir)).iterator().asScala
+        .filter(_.getFileName.toString.startsWith("part-")).toSeq
+        .sortBy(_.getFileName.toString)
+      val t0 = System.currentTimeMillis()
+      (parts ++ last).zipWithIndex.foreach { case (p, i) =>
+        Files.setLastModifiedTime(p, FileTime.fromMillis(t0 + 2000L * i))
+      }
+    }
 
     // ---- EdgeStream ------------------------------------------------------
 
@@ -111,55 +95,27 @@ object StreamFaultDrill {
       .select(col("ts"), col("user_id"), col("event_type"))
       .repartitionByRange(8, col("ts")).sortWithinPartitions(col("ts"))
       .write.mode("overwrite").json(edgeIn)
-    // FileStreamSource orders files by MODIFICATION TIME; the parts all
-    // land within the same write and can tie/shuffle, and an
-    // out-of-range-order file would advance the watermark past earlier
-    // hours and late-drop them (the first drill run measured exactly
-    // that: 8 of 48 edges). Stamp an explicit mtime staircase in path
-    // (= ts-range) order so arrival order IS time order; the two
-    // sentinel files get the top steps — advance the watermark, then
-    // fire the timers.
-    val parts = Files.list(Paths.get(edgeIn)).iterator().asScala
-      .filter(_.getFileName.toString.startsWith("part-")).toSeq
-      .sortBy(_.getFileName.toString)
-    val t0 = System.currentTimeMillis()
-    parts.zipWithIndex.foreach { case (p, i) =>
-      Files.setLastModifiedTime(p,
-        java.nio.file.attribute.FileTime.fromMillis(t0 + 2000L * i))
-    }
+    // Parts are ts-ranges: an out-of-range-order file would advance the
+    // watermark past earlier hours and late-drop them (the first drill
+    // run measured exactly that: 8 of 48 edges). Two far-future sentinel
+    // files get the top steps, so they are the final two micro-batches:
+    // they advance the watermark past every real bucket's close and fire
+    // the timers (the EdgeStreamSpec finalize pattern, in files).
     val sentinel =
       """{"ts":"2099-01-01T00:00:00.000Z","user_id":999999999,"event_type":"error"}"""
-    val s1 = Paths.get(s"$edgeIn/zz-sentinel-1.json")
-    val s2 = Paths.get(s"$edgeIn/zz-sentinel-2.json")
-    Files.writeString(s1, sentinel + "\n")
-    Files.writeString(s2, sentinel + "\n")
-    Files.setLastModifiedTime(s1, java.nio.file.attribute.FileTime
-      .fromMillis(t0 + 2000L * (parts.size + 1)))
-    Files.setLastModifiedTime(s2, java.nio.file.attribute.FileTime
-      .fromMillis(t0 + 2000L * (parts.size + 2)))
+    val sentinels = Seq(1, 2).map(i => Paths.get(s"$edgeIn/zz-sentinel-$i.json"))
+    sentinels.foreach(Files.writeString(_, sentinel + "\n"))
+    staircase(edgeIn, sentinels)
 
     def runEdge(tag: String, kill: Boolean): Seq[(Long, Long, Long)] = {
-      val in = spark.readStream
-        .schema("ts TIMESTAMP, user_id LONG, event_type STRING")
-        .option("maxFilesPerTrigger", "1")
-        .json(edgeIn)
+      val in = source("ts TIMESTAMP, user_id LONG, event_type STRING", edgeIn)
       // lateness covers the corpus's full time span: no row can EVER be
       // late-dropped, buckets accumulate state across the whole run
       // (maximum surviving RocksDB state for the kill to threaten), and
       // every timer fires in the sentinel batches — arrival-order-immune
       // by construction, like the batch self-join it must equal
-      val q = streaming.EdgeStream.bucketEdges(in, lateness = "3650 days")
-        .toDF()
-        .writeStream.format("memory").queryName(s"edge_$tag")
-        .outputMode("append")
-        .option("checkpointLocation", s"$work/edge_ckpt_$tag")
-        .start()
-      val k = if (kill) Some(new Killer(s"edge_$tag", 2000)) else None
-      q.processAllAvailable()
-      val endMs = System.currentTimeMillis()
-      q.stop()
-      k.flatMap(_.assertFiredBefore(endMs)).foreach(f => failures ::= f)
-      spark.table(s"edge_$tag")
+      val out = streaming.EdgeStream.bucketEdges(in, lateness = "3650 days")
+      runMemory(s"edge_$tag", out.toDF(), "append", kill)._1
         .select("hour_epoch", "src", "dst")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .toSeq.sorted
@@ -188,23 +144,10 @@ object StreamFaultDrill {
       .write.mode("overwrite").json(kmvIn)
 
     def runKmv(tag: String, kill: Boolean): Seq[String] = {
-      val in = spark.readStream
-        .schema("source STRING, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .json(kmvIn)
-      val q = streaming.KmvStream.sketches(in)
-        .toDF()
-        .writeStream.format("memory").queryName(s"kmv_$tag")
-        .outputMode("update")
-        .option("checkpointLocation", s"$work/kmv_ckpt_$tag")
-        .start()
-      val k = if (kill) Some(new Killer(s"kmv_$tag", 2000)) else None
-      q.processAllAvailable()
-      val endMs = System.currentTimeMillis()
-      q.stop()
-      k.flatMap(_.assertFiredBefore(endMs)).foreach(f => failures ::= f)
-      streaming.KmvStream.overlapEstimates(
-          streaming.KmvStream.latest(spark.table(s"kmv_$tag")))
+      val out = streaming.KmvStream.sketches(
+        source("source STRING, text STRING", kmvIn))
+      val (table, _) = runMemory(s"kmv_$tag", out.toDF(), "update", kill)
+      streaming.KmvStream.overlapEstimates(streaming.KmvStream.latest(table))
         .collect().map(_.toString).toSeq.sorted
     }
 
@@ -232,46 +175,40 @@ object StreamFaultDrill {
       val idCol = col(df.columns.head)
       df.repartitionByRange(parts, idCol).sortWithinPartitions(idCol)
         .write.mode("overwrite").json(dir)
-      val fs = Files.list(Paths.get(dir)).iterator().asScala
-        .filter(_.getFileName.toString.startsWith("part-")).toSeq
-        .sortBy(_.getFileName.toString)
-      val t = System.currentTimeMillis()
-      fs.zipWithIndex.foreach { case (p, i) =>
-        Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(t + 2000L * i))
-      }
-    }
-
-    def runAppend(tag: String, inDir: String, schema: String,
-        mk: DataFrame => DataFrame, kill: Boolean): Seq[String] = {
-      val in = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").json(inDir)
-      val q = mk(in).writeStream.format("memory").queryName(tag)
-        .outputMode("append")
-        .option("checkpointLocation", s"$work/ckpt_$tag")
-        .start()
-      val k = if (kill) Some(new Killer(tag, 2000)) else None
-      q.processAllAvailable()
-      val endMs = System.currentTimeMillis()
-      q.stop()
-      k.flatMap(_.assertFiredBefore(endMs)).foreach(f => failures ::= f)
-      spark.table(tag).collect().map(_.toString).toSeq.sorted
+      staircase(dir)
     }
 
     def drillAppend(name: String, inDir: String, schema: String,
         mk: DataFrame => DataFrame): Seq[String] = {
-      val clean = runAppend(s"${name}_clean", inDir, schema, mk, kill = false)
-      val fault = runAppend(s"${name}_fault", inDir, schema, mk, kill = true)
+      // every staged row must reach the clean stream: a lost input row
+      // can be invisible to the verdicts (a doc that is neither dup nor
+      // owner). Only the clean run's count is exact: under a kill, a
+      // recomputed stage reads its rows again and its scan counts them
+      // twice (EmbedStream's faulted run reported 600 of 500). The faulted
+      // run is held to bit-equality with the clean one instead.
+      val staged = spark.read.schema(schema).json(inDir).count()
+      def run(tag: String, kill: Boolean): (Seq[String], Long) = {
+        val (table, seen) =
+          runMemory(tag, mk(source(schema, inDir)), "append", kill)
+        (table.collect().map(_.toString).toSeq.sorted, seen)
+      }
+      val (clean, seen) = run(s"${name}_clean", kill = false)
+      val (fault, _) = run(s"${name}_fault", kill = true)
       if (fault != clean)
         failures ::= s"$name: faulted ${fault.size} rows != clean ${clean.size}"
-      println(s"[streamdrill] $name: clean=${clean.size} verdict rows, " +
+      if (seen != staged)
+        failures ::= s"$name: clean run saw $seen of $staged staged rows; input lost"
+      println(s"[streamdrill] $name: clean=${clean.size} verdict rows " +
+        s"from $seen of $staged staged rows, " +
         s"faulted=${if (fault == clean) "bit-equal" else "DIVERGED"}")
       clean
     }
 
-    // DedupStream — text LSH verdicts; ordered arrival ⇒ the dupDocs
-    // fold must ALSO equal the batch d12 decision (the StreamDrill
-    // contract, now certified under executor loss)
+    // DedupStream — text LSH verdicts through a real file source across
+    // executor JVMs with RocksDB state; ordered arrival over 6
+    // micro-batches ⇒ the clean run's dupDocs fold must ALSO equal the
+    // batch d12 decision, and be non-empty (an empty fold equals an empty
+    // d12 while proving nothing)
     val dedupIn = s"$work/dedup_in"
     stageOrdered(Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text")), dedupIn, 6)
@@ -285,6 +222,8 @@ object StreamFaultDrill {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     if (dedupStreamDups != dedupBatch)
       failures ::= s"DedupStream: decision fold ${dedupStreamDups.size} != batch d12 ${dedupBatch.size}"
+    if (dedupStreamDups.isEmpty)
+      failures ::= "DedupStream: decision fold is empty; nothing compared"
     println(s"[streamdrill] DedupStream fold: ${dedupStreamDups.size} dups, " +
       s"batch d12=${if (dedupStreamDups == dedupBatch) "match" else "MISMATCH"}")
 

@@ -119,13 +119,20 @@ object Telemetry {
         e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
   }
 
-  /** Idempotent per-JVM install of both hooks on this session. */
-  @volatile private var installed = false
+  /** Sessions with both hooks installed. WEAK keys, as in
+    * `Caches.autoInstalled`: the hooks are held by the session's own
+    * listener manager and stream manager, so this set must never pin a
+    * session. Guarded by this object's lock.
+    */
+  private val installed =
+    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()
+
+  /** Idempotent per-session install of both hooks. */
   def install(s: SparkSession): Unit = synchronized {
-    if (!installed) {
+    if (!installed.containsKey(s)) {
       s.listenerManager.register(Listener)
       s.streams.addListener(StreamListener)
-      installed = true
+      installed.put(s, java.lang.Boolean.TRUE)
     }
   }
 

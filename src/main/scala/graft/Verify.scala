@@ -29,13 +29,12 @@ object Verify {
       }
       // operator-internal caches are scoped to one query's execution;
       // release them so the ~160-query run doesn't accumulate storage
-      // blocks. clearCache only drops SQL InMemoryRelations — GraphX
-      // Graph() persists its vertex/edge RDDs (MEMORY_ONLY, deserialized)
-      // outside the SQL cache, so the graph queries would otherwise leak
-      // heap across the run (measured: the 8g sf1 run died of exactly
-      // this after 66 queries); releaseAll sweeps those too.
+      // blocks. Clearing the SQL cache is not enough — GraphX Graph()
+      // persists its vertex/edge RDDs (MEMORY_ONLY, deserialized)
+      // outside it, so the graph queries would otherwise leak heap
+      // across the run (measured: the 8g sf1 run died of exactly this
+      // after 66 queries); releaseAll sweeps both.
       Caches.releaseAll(spark)
-      spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -37,7 +37,7 @@ case class DupVerdict(doc_id: Long, dup_of: Long, jaccard: Double)
   * from band collision (never a corpus join), the verify is exact, and
   * the owner is the EARLIEST verifying member (smallest doc id, reported
   * with its own Jaccard — d12's arg_min attribution, asserted by
-  * DedupStreamSpec/StreamDrill).
+  * DedupStreamSpec and StreamFaultDrill's DedupStream arm).
   *
   * Jaccard-universe caveat: the batch family drops shingles with
   * df > [[graft.operators.Dedup.MaxShingleDf]] from BOTH sides of the

@@ -1,11 +1,13 @@
 package graft
 
 import org.apache.spark.sql.GraftBridge
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Contract of the [[Caches]] registry: operator-internal caches register
   * per session, [[Caches.release]] drops exactly those (and drains its
-  * strong refs), consumer caches survive, and the c13 pipeline keeps its
+  * strong refs), consumer caches survive it (the harness sweep
+  * [[Caches.releaseAll]] drops them too), and the c13 pipeline keeps its
   * stronger claim — eager internal release of all four frames (canon,
   * shingles, capped rows, capShingles' hot list via capShinglesKeep), so
   * the SQL cache is EMPTY right after a run with no release call at all.
@@ -15,12 +17,7 @@ class CachesSpec extends AnyFunSuite with SparkTestSession {
   private def persistedIds: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
-  private def drainAll(): Unit = {
-    Caches.release(spark)
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(r => if (!r.isCheckpointed) r.unpersist(true))
-  }
+  private def drainAll(): Unit = Caches.releaseAll(spark)
 
   test("release drops the operator-internal caches a query materialized, not consumer caches") {
     drainAll()
@@ -42,6 +39,17 @@ class CachesSpec extends AnyFunSuite with SparkTestSession {
       "consumer cache must survive Caches.release")
     assert(mine.storageLevel.useMemory)
     mine.unpersist(blocking = true)
+    assert(GraftBridge.sqlCacheIsEmpty(spark))
+  }
+
+  test("releaseAll is the whole between-query sweep: a consumer cache leaves the SQL cache too") {
+    drainAll()
+    val mine = spark.range(0, 1000L).toDF("id").cache()
+    assert(mine.count() == 1000L)
+    assert(!GraftBridge.sqlCacheIsEmpty(spark))
+    Caches.releaseAll(spark)
+    assert(mine.storageLevel == StorageLevel.NONE,
+      "releaseAll must drop consumer SQL cache entries")
     assert(GraftBridge.sqlCacheIsEmpty(spark))
   }
 

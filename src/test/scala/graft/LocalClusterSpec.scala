@@ -11,6 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * one a child of this JVM, one orphaned (its parent exits at once, so it
   * belongs to no one here) — the process an `allProcesses()` scan would
   * also have matched.
+  *
+  * The shared [[LocalCluster.Killer]]'s landing receipt is pinned on
+  * stand-in children too (a single `bash` blocked in its `read` builtin,
+  * marker as `$0`); no Spark executor is started.
   */
 class LocalClusterSpec extends AnyFunSuite {
 
@@ -19,6 +23,69 @@ class LocalClusterSpec extends AnyFunSuite {
   private def kill(p: ProcessHandle): Unit = {
     p.descendants().forEach(d => d.destroyForcibly())
     p.destroyForcibly()
+  }
+
+  /** A marked child of this JVM, once it has exec'd into `bash`. */
+  private def standIn(): Process = {
+    val p = new ProcessBuilder("bash", "-c", "read -t 60", Marker).start()
+    val deadline = System.currentTimeMillis + 10000
+    while (!LocalCluster.ownExecutors().exists(_.pid == p.pid) &&
+        System.currentTimeMillis < deadline) Thread.sleep(20)
+    assert(LocalCluster.ownExecutors().exists(_.pid == p.pid))
+    p
+  }
+
+  private def await(cond: => Boolean): Boolean = {
+    val deadline = System.currentTimeMillis + 10000
+    while (!cond && System.currentTimeMillis < deadline) Thread.sleep(20)
+    cond
+  }
+
+  test("receipt: a kill that lands during the guarded run passes") {
+    val child = standIn()
+    try {
+      val k = new LocalCluster.Killer("during", 100)
+      // the guarded run lasts until the executor is gone
+      assert(await(!child.isAlive))
+      val endMs = System.currentTimeMillis()
+      assert(k.receipt(endMs).isEmpty)
+      assert(k.killedAtMs > 0 && k.killedAtMs <= endMs)
+    } finally kill(child.toHandle)
+  }
+
+  test("receipt: a kill that lands after the run ended reports a failure") {
+    val child = standIn()
+    try {
+      val k = new LocalCluster.Killer("after", 200)
+      val endMs = System.currentTimeMillis()
+      // the receipt is taken late, once the kill has already landed
+      assert(await(!child.isAlive))
+      val r = k.receipt(endMs)
+      assert(r.exists(_.contains("AFTER the run ended")), r)
+      assert(k.killedAtMs > endMs)
+    } finally kill(child.toHandle)
+  }
+
+  test("receipt: with no marked descendant the kill records -2 and fails") {
+    assert(await(LocalCluster.ownExecutors().isEmpty))
+    val k = new LocalCluster.Killer("none", 0)
+    assert(await(k.killedAtMs != -1L))
+    val r = k.receipt(System.currentTimeMillis() + 60000)
+    assert(k.killedAtMs == -2L)
+    assert(r.exists(_.contains("no executor JVM found")), r)
+  }
+
+  test("receipt: a run that ends before the delay fails and the killer kills nothing") {
+    val child = standIn()
+    try {
+      val k = new LocalCluster.Killer("early", 1000)
+      val r = k.receipt(System.currentTimeMillis())
+      assert(r.exists(_.contains("never fired")), r)
+      // well past the delay: the interrupted killer never fired
+      Thread.sleep(2000)
+      assert(k.killedAtMs == -1L)
+      assert(child.isAlive)
+    } finally kill(child.toHandle)
   }
 
   test("ownExecutors never returns a process outside this JVM's descendants") {

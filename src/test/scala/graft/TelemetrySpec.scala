@@ -33,6 +33,26 @@ class TelemetrySpec extends AnyFunSuite with SparkTestSession {
       "map-side combine still writes one record per (partition, group)")
   }
 
+  test("install is per session: a second session gets its own hooks") {
+    Telemetry.install(spark)
+    val s2 = spark.newSession()
+    Telemetry.install(s2)
+    Telemetry.clear()
+    import spark.implicits._
+    // a shuffle run in the NEW session only
+    val out = s2.range(10000)
+      .select((col("id") % 100).as("k"), col("id").as("v"))
+      .groupBy("k").agg(sum("v").as("s"))
+      .collect()
+    assert(out.length == 100)
+    def fetch() = Telemetry.queryStats(spark)
+      .filter(col("shuffleBytesWritten") > 0).as[Telemetry.QueryStat].collect()
+    var tries = 0
+    var stats = fetch()
+    while (stats.isEmpty && tries < 50) { Thread.sleep(100); tries += 1; stats = fetch() }
+    assert(stats.nonEmpty, "the second session's shuffle must reach the ledger")
+  }
+
   test("streaming ledger: stateful query reports state rows per batch") {
     Telemetry.install(spark)
     Telemetry.clear()
