@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Per-round benchmark main (driver contract): runs the headline queries on
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line
   * `{"metric":…,"value":N,"unit":"sec","queries":{…},"sf":…}`.
@@ -7,6 +9,9 @@ package graft
   * A warm-up action runs first so JVM/classloader/codegen startup cost is
   * not attributed to the first query. Query failures print to stderr and
   * report -1 — never silently counted as a timing.
+  * The file artifact adds per-query `layers` from [[Telemetry]]'s jobs in
+  * the fastest run's window (not by job group: v14's `Future` cuts run on
+  * pool threads with stale local properties).
   */
 object Bench {
   /** The r15 pin of g06 at sf0.1 (s) that `anchor_norm_total` rescales
@@ -16,6 +21,12 @@ object Bench {
     * `value` is unaffected. Artifacts record `anchor_ref_s`.
     */
   val AnchorRefR15 = 1.43
+
+  /** A query's run times (s; -1 failed) and its fastest run's jobs. */
+  final case class Result(name: String, times: Seq[Double],
+      jobs: Option[Seq[Telemetry.JobStat]]) {
+    def best: Double = times.filter(_ >= 0).minOption.getOrElse(-1.0)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -38,57 +49,13 @@ object Bench {
       case None      => SparkEntry.headline
     }
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
-    val sinkMode = sys.env.getOrElse("SPARK_GRAFT_SINK", "noop")
     // SPARK_GRAFT_DRILL_KILL_MS (drill-only, with a local-cluster master):
     // force-kill one executor JVM that many ms into the timed loop — the
     // bench-under-fault certification (SCALE.md round 13). The audit line
     // below reports when the kill landed against the loop's end.
     val killer = sys.env.get("SPARK_GRAFT_DRILL_KILL_MS")
       .map(ms => new LocalCluster.Killer("bench", ms.toLong))
-    // best of N runs per query (default 3): the first run carries
-    // codegen-compile and JIT cost plus container noise (measured variance
-    // up to 3x on the iterative queries, and round-2 showed container-wide
-    // I/O noise can hit BOTH of 2 runs); the min is the steady-state number
-    // a warm long-lived cluster sees.
-    val results = names.map { name =>
-      val fn = SparkEntry.queries(name)
-      val times = (1 to runs).map { _ =>
-        // drop operator-internal InMemoryRelations between runs: without
-        // this, run 2 of a caching query (d03, g06, ...) measures a
-        // cache hit while non-caching queries measure real recompute —
-        // incomparable numbers. JIT/page-cache warmth is what min() keeps.
-        // releaseAll also unpersists leaked RDD blocks (GraphX Graph()
-        // persists MEMORY_ONLY outside the SQL cache): accumulated storage
-        // blocks steal unified-memory execution room from later queries,
-        // which an r4 bench sample showed as a diffuse slowdown on the
-        // events/documents/embeddings queries that follow the graph ones.
-        Caches.releaseAll(spark)
-        val t0 = System.nanoTime()
-        // noop sink, NOT count(): count() lets Catalyst rewrite the plan
-        // under Aggregate[count(1)] — outer joins against unique keys are
-        // ELIMINATED (measured: d12's whole LSH chain vanished from its
-        // count plan — 0.56 s at sf1 for a query whose digest runs ~18 s)
-        // and projected-but-unreferenced expensive columns are pruned.
-        // The noop sink evaluates every output row in full, which is what
-        // a consumer of the query would pay.
-        // SPARK_GRAFT_SINK=count is a DIAGNOSTIC mode only (the
-        // count-elimination sweep, SCALE.md round 13): it deliberately
-        // reinstates the eliminable Aggregate[count(1)] sink so a
-        // noop-vs-count ratio can flag plans Catalyst can hollow out
-        // under count. Every recorded artifact uses the noop default.
-        try {
-          if (sinkMode == "count") fn(spark, sfDir).count()
-          else fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            -1.0
-        }
-      }
-      name -> (if (times.exists(_ >= 0)) times.filter(_ >= 0).min else -1.0)
-    }
+    val results = run(spark, sfDir, names, runs)
     // Drill audit line: whether the kill landed inside the timed loop and
     // whether the per-query release sweep left anything behind (tracked
     // registry entries, SQL cache, non-checkpointed persistent RDDs) —
@@ -105,11 +72,108 @@ object Bench {
       val drained = Caches.releaseAll(spark)
       System.err.println(s"[bench] drill: killedAtMs=${k.killedAtMs} " +
         s"loopEndMs=$loopEndMs rdds_pending=$pending " +
-        s"tracked_drained=$drained failures=${results.count(_._2 < 0)}")
+        s"tracked_drained=$drained failures=${results.count(_.best < 0)}")
     }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
+    // Persist the COMPLETE per-query JSON to a file: the driver captures a
+    // bounded 2000-char stdout tail, which head-truncated the full map once
+    // the headline grew past ~60 queries (r05 and r08 gate artifacts had
+    // parsed:null). The file is the complete artifact regardless of how much
+    // stdout survives.
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_full.json")
+    val (fileLine, stdoutLine) = render(results, runs, sfDir, outPath)
+    try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
+      (fileLine + "\n").getBytes("UTF-8"))
+    catch { case e: Exception =>
+      System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
+    }
+    // stop() BEFORE the headline print: Spark's shutdown can log to the
+    // console appender, and the driver's tail parser wants the JSON as
+    // the absolute last line of output (build.sbt strips sbt's own
+    // decoration around it — see `run / outputStrategy`). A shutdown
+    // hiccup must not eat the headline line — the measurements are
+    // already complete at this point — so stop() failures go to stderr
+    // and the JSON prints regardless.
+    try spark.stop()
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] spark.stop() failed: ${e.getMessage}")
+    }
+    println(stdoutLine)
+  }
+
+  /** The timed loop; each run's jobs are read after its timed region. */
+  def run(spark: SparkSession, sfDir: String, names: Seq[String],
+      runs: Int): Seq[Result] = {
+    Telemetry.install(spark)
+    // best of N runs per query (default 3): the first run carries
+    // codegen-compile and JIT cost plus container noise (measured variance
+    // up to 3x on the iterative queries, and round-2 showed container-wide
+    // I/O noise can hit BOTH of 2 runs); the min is the steady-state number
+    // a warm long-lived cluster sees.
+    names.map { name =>
+      val fn = SparkEntry.queries(name)
+      val timed = (1 to runs).map { _ =>
+        // drop operator-internal InMemoryRelations between runs: without
+        // this, run 2 of a caching query (d03, g06, ...) measures a
+        // cache hit while non-caching queries measure real recompute —
+        // incomparable numbers. JIT/page-cache warmth is what min() keeps.
+        // releaseAll also unpersists leaked RDD blocks (GraphX Graph()
+        // persists MEMORY_ONLY outside the SQL cache): accumulated storage
+        // blocks steal unified-memory execution room from later queries,
+        // which an r4 bench sample showed as a diffuse slowdown on the
+        // events/documents/embeddings queries that follow the graph ones.
+        Caches.releaseAll(spark)
+        val fromMs = System.currentTimeMillis()
+        val t0 = System.nanoTime()
+        // noop sink, NOT count(): count() lets Catalyst rewrite the plan
+        // under Aggregate[count(1)] — outer joins against unique keys are
+        // ELIMINATED (measured: d12's whole LSH chain vanished from its
+        // count plan — 0.56 s at sf1 for a query whose digest runs ~18 s)
+        // and projected-but-unreferenced expensive columns are pruned.
+        // The noop sink evaluates every output row in full, which is what
+        // a consumer of the query would pay.
+        val secs = try {
+          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+          (System.nanoTime() - t0) / 1e9
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+          -1.0
+        }
+        secs -> Telemetry.jobsIn(spark, fromMs, System.currentTimeMillis())
+      }
+      Result(name, timed.map(_._1),
+        timed.filter(_._1 >= 0).minByOption(_._1).flatMap(_._2))
+    }
+  }
+
+  /** The artifact's `layers` object for one query (see the object doc). */
+  private def layers(r: Result): String = {
+    val times = r.times.mkString(""""runs_s":[""", ",", "]")
+    r.jobs match {
+      case Some(js) =>
+        def sum(f: Telemetry.JobStat => Long) = js.map(f).sum
+        // union of the job intervals: by start, each job adds the part of
+        // its interval past the latest end so far
+        val (inJobsMs, _) = js.sortBy(_.startMs).foldLeft((0L, 0L)) {
+          case ((in, end), j) =>
+            (in + math.max(0L, j.endMs - math.max(j.startMs, end)), end max j.endMs)
+        }
+        s"""{$times,"jobs":${js.size},"stages":${sum(_.stages)},""" +
+          s""""tasks":${sum(_.tasks)},"input_bytes":${sum(_.inputBytes)},""" +
+          s""""shuffle_read_bytes":${sum(_.shuffleReadBytes)},""" +
+          s""""shuffle_write_bytes":${sum(_.shuffleWriteBytes)},""" +
+          s""""spill_bytes":${sum(_.spillBytes)},"in_jobs_s":${inJobsMs / 1000.0}}"""
+      case None if r.best >= 0 => s"""{$times,"ledger_complete":false}"""
+      case None => s"{$times}"
+    }
+  }
+
+  /** (file line, stdout line); the stdout line carries no layers. */
+  def render(results: Seq[Result], runs: Int, sfDir: String,
+      outPath: String): (String, String) = {
+    val best = results.map(r => r.name -> r.best)
+    val qs = best.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
+    val total = best.map(_._2).filter(_ >= 0).sum
     // Protocol fields (VERDICT r10 item 2): every artifact records its
     // best-of-N and, when the g06 anchor ran in the same window, the
     // anchor time — so a cross-window diff can tell container-I/O drift
@@ -128,29 +192,19 @@ object Bench {
     // `value` field is unchanged and stays the primary number; old
     // artifacts keep their old pin (the field records anchor_ref_s
     // precisely so cross-pin artifacts remain interpretable).
-    val anchor = results.collectFirst {
+    val anchor = best.collectFirst {
       case ("g06_pagerank_loop", v) if v >= 0 =>
         val norm =
           if (sfDir.contains("sf0.1")) {
-            val nt = results.map(_._2).filter(_ >= 0).sum * AnchorRefR15 / v
+            val nt = best.map(_._2).filter(_ >= 0).sum * AnchorRefR15 / v
             s""","anchor_ref_s":$AnchorRefR15,"anchor_norm_total":$nt"""
           } else ""
         s""","anchor_s":$v$norm"""
     }.getOrElse("")
-    val line =
+    val head =
       s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs$anchor,""" +
-        s""""queries":$qs,"sf":"$sfDir"}"""
-    // Persist the COMPLETE per-query JSON to a file: the driver captures a
-    // bounded 2000-char stdout tail, which head-truncated the full map once
-    // the headline grew past ~60 queries (r05 and r08 gate artifacts had
-    // parsed:null). The file is the complete artifact regardless of how much
-    // stdout survives.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_full.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case e: Exception =>
-      System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
-    }
+        s""""queries":$qs,"sf":"$sfDir""""
+    val line = head + "}"
     // The stdout line the driver actually parses must SURVIVE the 2000-char
     // tail (minus sbt's trailing "[success] Total time" line, ~70 chars). If
     // the full line fits, print it verbatim; otherwise print a compact line
@@ -172,31 +226,20 @@ object Bench {
           if (p.length <= 300) p else ""
         }
         val fixed = s"""{"metric":"total","value":$total,"unit":"sec",""" +
-          s""""runs":$runs$anchor,"queries_total":${results.size},$fullPtr""" +
+          s""""runs":$runs$anchor,"queries_total":${best.size},$fullPtr""" +
           s""""sf":"${esc(sfDir)}","queries":{"""
-        val entries = results.sortBy(-_._2)
-          .map { case (k, v) => "\"" + k + "\":" + v }
-        val sb = new StringBuilder(fixed)
-        var first = true
-        entries.foreach { e =>
-          val add = (if (first) 0 else 1) + e.length
-          if (sb.length + add + 2 <= budget) {
-            if (!first) sb.append(','); sb.append(e); first = false
-          }
-        }
-        sb.append("}}").toString
+        // slowest first, each entry kept while it still fits (the
+        // first has no comma, hence the extra 1 of room)
+        var room = budget - fixed.length - "}}".length + 1
+        best.sortBy(-_._2).map { case (k, v) => "\"" + k + "\":" + v }
+          .filter { e =>
+            val fits = e.length + 1 <= room
+            if (fits) room -= e.length + 1
+            fits
+          }.mkString(fixed, ",", "}}")
       }
-    // stop() BEFORE the headline print: Spark's shutdown can log to the
-    // console appender, and the driver's tail parser wants the JSON as
-    // the absolute last line of output (build.sbt strips sbt's own
-    // decoration around it — see `run / outputStrategy`). A shutdown
-    // hiccup must not eat the headline line — the measurements are
-    // already complete at this point — so stop() failures go to stderr
-    // and the JSON prints regardless.
-    try spark.stop()
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] spark.stop() failed: ${e.getMessage}")
-    }
-    println(stdoutLine)
+    val fileLine = results.map(r => s"\"${r.name}\":${layers(r)}")
+      .mkString(s"""$head,"layers":{""", ",", "}}")
+    (fileLine, stdoutLine)
   }
 }

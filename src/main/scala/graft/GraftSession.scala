@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** The one session config, and the one-call SQL surface over it.
   *
   * [[builder]] is the only place a graft entry point builds a session:
-  * Bench, Verify, Plans, Profile, the two drills and the test suite all
+  * Bench, Verify, Plans, the two drills and the test suite all
   * run under [[EngineConf]], so the session that certifies a query (the
   * oracle dump, the specs, the executor-loss drills) is the session that
   * benchmarks it — Kryo included, which every RDD shuffle, RDD checkpoint

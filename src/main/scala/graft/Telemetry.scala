@@ -1,9 +1,12 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedDeque
+import java.util.concurrent.{ConcurrentLinkedDeque, TimeoutException}
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -26,10 +29,12 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * AQE's final plan — the pre-execution plan lies about what actually
   * ran) and sums the load-bearing metrics: output rows, shuffle bytes
   * written, spill. Streaming: a [[StreamingQueryListener]] captures per-
-  * batch input rows, duration, and state-store totals.
+  * batch input rows, duration, and state-store totals. Jobs: a
+  * [[SparkListener]] (one per SparkContext) keeps each ended job's
+  * stages, tasks and bytes — the ledger Bench reads its layers from.
   *
-  * Both ledgers are fixed-capacity deques (default 256) — telemetry must
-  * never become the memory leak it exists to catch.
+  * All ledgers are fixed-capacity (256 entries) — telemetry must never
+  * become the memory leak it exists to catch.
   */
 object Telemetry {
   val Capacity = 256
@@ -49,6 +54,11 @@ object Telemetry {
       batchDurationMs: Long,
       stateRows: Long,
       stateBytes: Long)
+
+  /** One ended job; times are driver epoch ms, `stages` the ones that ran. */
+  final case class JobStat(jobId: Int, group: String, description: String,
+      startMs: Long, endMs: Long, stages: Int, tasks: Int, inputBytes: Long,
+      shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long)
 
   private val queries = new ConcurrentLinkedDeque[QueryStat]()
   private val batches = new ConcurrentLinkedDeque[BatchStat]()
@@ -119,34 +129,94 @@ object Telemetry {
         e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
   }
 
-  /** Sessions with both hooks installed. WEAK keys, as in
-    * `Caches.autoInstalled`: the hooks are held by the session's own
-    * listener manager and stream manager, so this set must never pin a
-    * session. Guarded by this object's lock.
+  /** Running jobs, their stages and the ended jobs, guarded by this
+    * object's lock. `droppedFromMs` is the latest start of a job the
+    * bound evicted: a window starting at or before it has lost a job.
+    */
+  private object JobListener extends SparkListener {
+    private val running = mutable.Map.empty[Int, JobStat]
+    private val stageJob = mutable.Map.empty[Int, Int]
+    private val ended = new java.util.ArrayDeque[JobStat]()
+    private var droppedFromMs = Long.MinValue
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      def prop(key: String) =
+        Option(e.properties).map(_.getProperty(key, "")).getOrElse("")
+      running(e.jobId) = JobStat(e.jobId, prop("spark.jobGroup.id"),
+        prop("spark.job.description"), e.time, -1L, 0, 0, 0L, 0L, 0L, 0L)
+      e.stageIds.foreach(stageJob(_) = e.jobId)
+    }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+      val si = e.stageInfo
+      for (id <- stageJob.get(si.stageId); j <- running.get(id);
+           m <- Option(si.taskMetrics)) {
+        val rd = m.shuffleReadMetrics
+        running(id) = j.copy(stages = j.stages + 1, tasks = j.tasks + si.numTasks,
+          inputBytes = j.inputBytes + m.inputMetrics.bytesRead,
+          shuffleReadBytes = j.shuffleReadBytes + rd.remoteBytesRead + rd.localBytesRead,
+          shuffleWriteBytes = j.shuffleWriteBytes + m.shuffleWriteMetrics.bytesWritten,
+          spillBytes = j.spillBytes + m.diskBytesSpilled)
+      }
+    }
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      running.remove(e.jobId).foreach { j =>
+        stageJob.filterInPlace((_, id) => id != e.jobId)
+        ended.addLast(j.copy(endMs = e.time))
+        while (ended.size > Capacity)
+          droppedFromMs = math.max(droppedFromMs, ended.pollFirst().startMs)
+      }
+    }
+
+    def window(fromMs: Long, toMs: Long): Option[Seq[JobStat]] = synchronized {
+      if (droppedFromMs >= fromMs) None
+      else Some(ended.asScala.filter(j => j.startMs >= fromMs &&
+        j.startMs <= toMs).toSeq.sortBy(_.jobId))
+    }
+    def all: Seq[JobStat] = synchronized(ended.asScala.toSeq)
+    def clear(): Unit = synchronized { ended.clear(); droppedFromMs = Long.MinValue }
+  }
+
+  /** Sessions and SparkContexts with their hooks installed. WEAK keys,
+    * as in `Caches.autoInstalled`: the hooks are held by the session's
+    * listener manager and stream manager and the context's listener bus,
+    * so this set must never pin either. Guarded by this object's lock.
     */
   private val installed =
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()
+    new java.util.WeakHashMap[AnyRef, java.lang.Boolean]()
 
-  /** Idempotent per-session install of both hooks. */
+  /** Idempotent install: both session hooks per session, the job
+    * listener once per SparkContext.
+    */
   def install(s: SparkSession): Unit = synchronized {
-    if (!installed.containsKey(s)) {
+    if (installed.put(s, java.lang.Boolean.TRUE) == null) {
       s.listenerManager.register(Listener)
       s.streams.addListener(StreamListener)
-      installed.put(s, java.lang.Boolean.TRUE)
     }
+    if (installed.put(s.sparkContext, java.lang.Boolean.TRUE) == null)
+      s.sparkContext.addSparkListener(JobListener)
   }
 
-  def clear(): Unit = { queries.clear(); batches.clear() }
+  def clear(): Unit = { queries.clear(); batches.clear(); JobListener.clear() }
 
-  /** The batch ledger as a DataFrame — telemetry analyzed by the engine
-    * itself (top shuffles, spill offenders, duration percentiles). */
-  def queryStats(s: SparkSession): DataFrame = {
-    import s.implicits._
-    queries.iterator().asScala.toSeq.toDF()
-  }
+  /** Ended jobs that started in `[fromMs, toMs]` (driver epoch ms), once
+    * the listener bus has delivered what was posted. None when the bound
+    * dropped one or the bus did not drain in 30 s: never a short list.
+    */
+  def jobsIn(s: SparkSession, fromMs: Long, toMs: Long): Option[Seq[JobStat]] =
+    try {
+      ListenerBusDrain(s.sparkContext, 30000L)
+      JobListener.window(fromMs, toMs)
+    } catch { case _: TimeoutException => None }
 
-  def batchStats(s: SparkSession): DataFrame = {
-    import s.implicits._
-    batches.iterator().asScala.toSeq.toDF()
-  }
+  /** The ledgers as DataFrames — telemetry analyzed by the engine itself
+    * (top shuffles, spill offenders, duration percentiles, long jobs). */
+  def queryStats(s: SparkSession): DataFrame =
+    s.createDataFrame(queries.asScala.toSeq)
+
+  def jobStats(s: SparkSession): DataFrame = s.createDataFrame(JobListener.all)
+
+  def batchStats(s: SparkSession): DataFrame =
+    s.createDataFrame(batches.asScala.toSeq)
 }

@@ -322,9 +322,6 @@ object CoGraph {
     * Same alias discipline as [[edges]]; the summed `hour_value` is the
     * SOURCE side's (`sum(a.hour_value)` in the oracle mirror below).
     */
-  private def weightedEdgesRaw(s: SparkSession, dir: String): DataFrame =
-    weightedEdgesRawOn(hourValue(s, dir))
-
   private def weightedEdgesRawOn(hv: DataFrame): DataFrame =
     hv.as("a").join(hv.as("b"),
         col("a.hour_epoch") === col("b.hour_epoch")

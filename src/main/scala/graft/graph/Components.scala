@@ -4,7 +4,6 @@ import graft.Caches.Tracked
 import org.apache.spark.graphx.{Edge, Graph, VertexId}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.Tables
 
 /** G3/G4 — connected components + component analytics (reference

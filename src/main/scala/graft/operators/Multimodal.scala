@@ -35,8 +35,6 @@ case class MediaFeatures(doc_id: Long, media_type: String, byte_len: Long,
   * not a separate system.
   */
 object Multimodal {
-  import TextFn.{charFingerprint, charFingerprintSql}
-
   /** The media table: text bytes stand in for the media payload; metadata
     * (type, dimensions, sample rate) derives deterministically from the
     * document row so the oracle can reproduce it.

@@ -77,11 +77,12 @@ class Round14Spec extends AnyFunSuite with SparkTestSession {
     val c1 = mx * 8 / 10
     val c2 = mx * 9 / 10
     val dir = "/tmp/d14_twoepoch_sf0001"
-    operators.Dedup.d14BuildIndex(docs.filter(col("doc_id") < c1), dir)
+    val index =
+      operators.Dedup.d14BuildIndex(docs.filter(col("doc_id") < c1), dir)
     operators.Dedup.d14AppendEpoch(spark,
-      docs.filter(col("doc_id") >= c1 && col("doc_id") < c2), dir)
+      docs.filter(col("doc_id") >= c1 && col("doc_id") < c2), index)
     val probe = operators.Dedup.d14ProbeIndex(spark,
-      docs.filter(col("doc_id") >= c2), dir)
+      docs.filter(col("doc_id") >= c2), index)
       .select("doc_id", "is_kept", "dup_of", "jaccard")
     val d12 = operators.Dedup.queries("d12_arrival_dedup")(spark, Sf)
     assertSame(probe, restrictTo(d12, c2))
@@ -106,8 +107,8 @@ class Round14Spec extends AnyFunSuite with SparkTestSession {
     val stored = all.filter(col("doc_id") < 100)
     val inc = all.filter(col("doc_id") >= 100)
     val dir = "/tmp/d14_capcross"
-    operators.Dedup.d14BuildIndex(stored, dir)
-    val probe = operators.Dedup.d14ProbeIndex(spark, inc, dir)
+    val index = operators.Dedup.d14BuildIndex(stored, dir)
+    val probe = operators.Dedup.d14ProbeIndex(spark, inc, index)
       .select("doc_id", "is_kept", "dup_of", "jaccard")
     val d12 = operators.Dedup.arrivalDecisionOn(spark, all,
       dictionaryIds = false)

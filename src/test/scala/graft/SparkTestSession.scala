@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (getOrCreate singleton). */
@@ -16,28 +12,22 @@ trait SparkTestSession {
   lazy val spark: SparkSession = GraftSession.builder("local[4]", 4)
     .getOrCreate()
 
-  /** Jobs started while `body` runs on this thread, counted by a job
-    * group so no other thread's jobs are included.
+  /** Jobs started while `body` runs on this thread, read from
+    * [[Telemetry]]'s job ledger by a job group, so no other thread's jobs
+    * are included.
     */
   def jobsOf(body: => Any): Int = {
+    Telemetry.install(spark)
     val group = s"jobs-of-${System.nanoTime}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
-    }
     val sc = spark.sparkContext
-    sc.addSparkListener(listener)
+    val fromMs = System.currentTimeMillis
     sc.setJobGroup(group, "counted")
     try {
       body
-      ListenerBusDrain(sc)
-      jobs.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+      Telemetry.jobsIn(spark, fromMs, System.currentTimeMillis)
+        .getOrElse(throw new AssertionError("the job ledger dropped jobs"))
+        .count(_.group == group)
+    } finally sc.clearJobGroup()
   }
 
   /** Run `body` with the streaming state-store provider pinned (e.g. to
